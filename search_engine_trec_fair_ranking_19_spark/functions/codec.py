@@ -8,7 +8,7 @@ stream (gaps, TFs, doc lengths) is LEB128-encoded. Typical web-scale posting
 blocks compress ~4-6× vs fixed 8-byte records.
 
 These are pure functions over numpy arrays so they are property-testable
-off-Spark and Arrow-friendly inside pandas UDFs.
+off-Spark and run on raw Arrow buffers inside ``mapInArrow`` kernels.
 """
 
 from __future__ import annotations

@@ -32,13 +32,15 @@ import json
 import math
 import os
 import time
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
 from ..config import DEFAULT_CONFIG, EngineConfig
 from ..session import local_rows_df
-from ..functions.codec import encode_blocks_concat
+from ..functions.codec import decode_blocks_concat, encode_blocks_concat
 
 TOKENS_SCHEMA = "docid long, term string, tf int, dl int, max_tf int"
 BLOCKS_SCHEMA = (
@@ -103,6 +105,40 @@ def _right_size_for_cache(df: DataFrame) -> DataFrame:
     return df
 
 
+# bytes one cached decoded posting takes in the in-memory columnar cache
+# (compressed: term runs, small docid deltas, dictionary-coded tf/dl).
+# Measured 2.0 B on the sf0.01 gate corpus (12k postings) and 4.4 B on the
+# 4,000-doc benchmark corpus (293k postings in 1.29 MB); rounded up for
+# corpora whose columns compress less.
+_DECODED_BYTES_PER_POSTING = 8
+
+
+def _storage_memory_bytes(spark: SparkSession) -> int:
+    """Storage memory of the block managers that cache partitions, from
+    ``getExecutorMemoryStatus``: every executor's, or the driver's in local
+    mode (where the driver is the only block manager)."""
+    mem = {}  # block manager host:port → max storage bytes
+    it = spark.sparkContext._jsc.sc().getExecutorMemoryStatus().iterator()
+    while it.hasNext():
+        kv = it.next()
+        mem[kv._1()] = kv._2()._1()
+    if len(mem) > 1:
+        env = spark._jvm.org.apache.spark.SparkEnv.get()
+        mem.pop(env.blockManager().blockManagerId().hostPort(), None)
+    return sum(mem.values())
+
+
+def _in_session(df: DataFrame, spark: SparkSession) -> DataFrame:
+    """``df``'s plan as a DataFrame of ``spark`` — another session of the same
+    application shares the cache manager, so a cached ``df`` stays cached."""
+    if df.sparkSession is spark:
+        return df
+    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        spark._jsparkSession, df._jdf.logicalPlan()
+    )
+    return DataFrame(jdf, spark)
+
+
 @dataclass
 class IndexTables:
     """Handle to the on-disk index (the rebuild's INDEX_DIR).
@@ -113,13 +149,34 @@ class IndexTables:
     OS page cache (`Indexer.java:643-651`, `MemoryBuffers.java:30-73`).
     MEMORY_ONLY (not MEMORY_AND_DISK) on purpose: at web scale eviction just
     drops partitions and the scan falls back to the parquet files — no
-    local-disk double-write of a 100 TB table. After any table mutation
-    (streaming ingest / compaction), call :meth:`refresh`.
+    local-disk double-write of a 100 TB table.
+
+    Postings are cached twice, each filled on first use:
+
+    * ``postings``: the compressed blocks, which block-max WAND and the
+      block-pruned AND read, because they prune on block metadata before
+      any decode;
+    * ``decoded_postings``: one row per posting, ``(block_id, term, docid,
+      tf, dl)``, decoded once per handle by one ``mapInArrow`` pass. Every
+      other query path filters it with ``term IN (...)``, so a query runs
+      no Python and scores in whole-stage codegen. Only cached while a
+      bound on its size fits (:meth:`_decoded_fits`); above it, queries
+      decode the compressed blocks they match, per query.
+
+    After any table mutation (streaming ingest / compaction), call
+    :meth:`refresh`.
     """
 
     path: str
     config: EngineConfig
     io: object | None = None  # table-IO backend; None → ParquetDirIO(path)
+    # per-handle state, dropped by refresh(): cached frames by table name
+    # (None = decoded postings over the size gate), temp-view names by table
+    # name, the collection_stats row, and the driver vocabulary map
+    _df_cache: dict = field(init=False, repr=False, compare=False, default_factory=dict)
+    _view_names: dict = field(init=False, repr=False, compare=False, default_factory=dict)
+    _cs_cache: dict | None = field(init=False, repr=False, compare=False, default=None)
+    _vocab_map_state: tuple | None = field(init=False, repr=False, compare=False, default=None)
 
     def _io(self):
         if self.io is None:
@@ -131,27 +188,45 @@ class IndexTables:
     def _read(self, spark: SparkSession, name: str) -> DataFrame:
         return self._io().read(spark, name)
 
-    def _cached(self, spark: SparkSession, name: str) -> DataFrame:
+    def _cached(self, spark: SparkSession, name: str) -> DataFrame | None:
         from pyspark import StorageLevel
 
-        cache = getattr(self, "_df_cache", None)
-        if cache is None:
-            cache = {}
-            self._df_cache = cache
-        if name not in cache:
-            cache[name] = _right_size_for_cache(self._read(spark, name)).persist(
-                StorageLevel.MEMORY_ONLY
+        if name not in self._df_cache:
+            if name != "decoded_postings":
+                df = _right_size_for_cache(self._read(spark, name))
+            elif self._decoded_fits(spark):
+                df = decode_blocks(
+                    _right_size_for_cache(self._read(spark, "postings")),
+                    keep=("block_id",),
+                )
+            else:
+                df = None
+            self._df_cache[name] = (
+                None if df is None else df.persist(StorageLevel.MEMORY_ONLY)
             )
-        return cache[name]
+        return self._df_cache[name]
+
+    def _decoded_fits(self, spark: SparkSession) -> bool:
+        """Size gate of the decoded-postings cache: ``n_docs · avgdl`` (the
+        token count, ≥ Σ DF, so ≥ the posting count, and known without a
+        job) times the measured bytes per cached decoded posting must fit in
+        half the storage memory of the block managers that cache partitions.
+        The gate, not MEMORY_ONLY eviction, keeps the cache small: the term
+        filter sits above the cached relation, so an evicted partition would
+        be recomputed by decoding every block in it."""
+        cs = self.collection_stats(spark)
+        bound = cs["n_docs"] * cs["avgdl"] * _DECODED_BYTES_PER_POSTING
+        return bound <= _storage_memory_bytes(spark) / 2
 
     def refresh(self) -> None:
         """Drop every per-handle cache (after ingest/compaction/writeback)."""
-        for df in getattr(self, "_df_cache", {}).values():
-            df.unpersist()
-        self._df_cache = {}
+        for df in self._df_cache.values():
+            if df is not None:
+                df.unpersist()
+        self._df_cache.clear()
+        self._view_names.clear()  # re-register views over the fresh caches
         self._cs_cache = None
         self._vocab_map_state = None
-        self._view_names = None  # re-register views over the fresh caches
 
     def doc_ids(self, spark):  # (docid long, url string)
         return self._cached(spark, "doc_ids")
@@ -162,57 +237,59 @@ class IndexTables:
     def postings(self, spark):  # BLOCKS_SCHEMA
         return self._cached(spark, "postings")
 
+    def decoded_postings(self, spark) -> DataFrame | None:
+        """(block_id, term, docid, tf, dl), one row per posting; None when
+        the size gate is closed (:meth:`_decoded_fits`)."""
+        return self._cached(spark, "decoded_postings")
+
     def vocabulary(self, spark):  # (term, df)
         return self._cached(spark, "vocabulary")
 
     def pagerank(self, spark):  # (docid, pagerank)
         return self._cached(spark, "pagerank")
 
-    def table_view(self, spark, name: str) -> str:
-        """Temp-view name over a cached table (registered once per handle).
-        Lets the single-statement SQL query paths reference the SAME cached
-        DataFrames the Column-API paths scan — one `spark.sql` round-trip
-        instead of ~260 Py4J calls of incremental plan building (the
-        driver-side half of the single-query latency floor)."""
-        views = getattr(self, "_view_names", None)
-        if views is None:
-            views = {}
-            self._view_names = views
-        if name not in views:
+    def table_view(self, spark, name: str) -> str | None:
+        """Temp-view name over a cached table, registered in the live
+        session (temp views are per session: a ``newSession()`` on the same
+        handle registers its own). Lets the single-statement SQL query paths
+        reference the SAME cached DataFrames the Column-API paths scan — one
+        `spark.sql` round-trip instead of ~260 Py4J calls of incremental plan
+        building (the driver-side half of the single-query latency floor).
+        None when the table is not cached (decoded postings over the size
+        gate)."""
+        vname = self._view_names.get(name)
+        if vname is None or not spark.catalog.tableExists(vname):
+            df = self._cached(spark, name)
+            if df is None:
+                return None
             vname = f"__themis_{name}_{abs(id(self))}"
-            self._cached(spark, name).createOrReplaceTempView(vname)
-            views[name] = vname
-        return views[name]
-
-    def postings_view(self, spark) -> str:
-        return self.table_view(spark, "postings")
+            _in_session(df, spark).createOrReplaceTempView(vname)
+            self._view_names[name] = vname
+        return vname
 
     def vocab_map(self, spark) -> dict[str, int] | None:
         """Whole-vocabulary driver map — the rebuild of the reference loading
         `vocabulary.idx` into a heap HashMap at query time
-        (`Indexer.java:643-651`). Returns None above the size cap (at
-        10^12-doc scale the vocabulary no longer fits on the driver; query
-        paths then fall back to a pushed-filter scan of the cached table)."""
-        state = getattr(self, "_vocab_map_state", None)
-        if state is None:
-            vocab = self.vocabulary(spark)
-            n = vocab.count()
-            if n <= self.config.vocab_driver_cache_max_terms:
-                m = {r[0]: int(r[1]) for r in vocab.collect()}
-            else:
-                m = None
-            state = ("loaded", m)
-            self._vocab_map_state = state
-        return state[1]
+        (`Indexer.java:643-651`). One Arrow collect of at most cap+1 rows
+        straight from the table files (the vocabulary table is not cached
+        for it). Returns None above the size cap (at 10^12-doc scale the
+        vocabulary no longer fits on the driver; query paths then fall back
+        to a pushed-filter scan of the cached table)."""
+        if self._vocab_map_state is None:
+            cap = self.config.vocab_driver_cache_max_terms
+            t = self._read(spark, "vocabulary").limit(cap + 1).toArrow()
+            m = None
+            if t.num_rows <= cap:
+                m = dict(zip(t.column("term").to_pylist(), t.column("df").to_pylist()))
+            self._vocab_map_state = (m,)
+        return self._vocab_map_state[0]
 
     def collection_stats(self, spark) -> dict:
         # 1-row table, immutable once built — cache on the handle so query
         # paths don't pay a Spark job per query for N/avgdl
-        cached = getattr(self, "_cs_cache", None)
-        if cached is None:
-            cached = self._read(spark, "collection_stats").head().asDict()
-            self._cs_cache = cached
-        return cached
+        if self._cs_cache is None:
+            self._cs_cache = self._read(spark, "collection_stats").head().asDict()
+        return self._cs_cache
 
     @property
     def manifest_path(self) -> str:
@@ -535,6 +612,56 @@ def build_postings_blocks(
     return grouped.mapInArrow(encode, schema=BLOCKS_SCHEMA)
 
 
+def decode_blocks(blocks: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
+    """Encoded posting-block rows → one row per posting,
+    ``(*keep, term, docid, tf, dl)`` — the inverse of
+    :func:`build_postings_blocks`' encode, as one ``mapInArrow``.
+
+    ``keep`` carries extra block-level columns (e.g. ``block_id`` for the
+    batched WAND's per-(qid, block) survivor semi-join) to every posting of
+    the block. Per Arrow batch, the three binary columns' offsets and data
+    buffers go to ONE :func:`decode_blocks_concat` pass as they are (no
+    per-block Python object), and ``term`` / ``keep`` are expanded with an
+    Arrow ``take`` over each block's row index repeated by its posting
+    count. An empty input yields no rows."""
+    head = [*keep, "term"]
+    schema = T.StructType(
+        [blocks.schema[c] for c in head]
+        + [T.StructField(c, T.LongType()) for c in ("docid", "tf", "dl")]
+    )
+    n_head = len(head)
+
+    def decode(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        def stream(arr):
+            # (data bytes, byte offsets from 0) of a binary column, zero-copy
+            bufs = arr.buffers()
+            width = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+            offs = np.frombuffer(bufs[1], dtype=width)[
+                arr.offset : arr.offset + len(arr) + 1
+            ].astype(np.int64)
+            data = np.frombuffer(bufs[2], dtype=np.uint8) if bufs[2] else b""
+            return data[offs[0] : offs[-1]], offs - offs[0]
+
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            (gb, go), (tb, to), (db, do) = (
+                stream(batch.column(n_head + i)) for i in range(3)
+            )
+            docids, tfs, dls, voff = decode_blocks_concat(gb, go, tb, to, db, do)
+            rows = pa.array(np.repeat(np.arange(batch.num_rows), np.diff(voff)))
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(i).take(rows) for i in range(n_head)]
+                + [pa.array(docids), pa.array(tfs), pa.array(dls)],
+                names=schema.names,
+            )
+
+    return blocks.select(*head, "gaps", "tfs", "dls").mapInArrow(decode, schema)
+
+
 def write_postings(
     spark: SparkSession,
     blocks: DataFrame,
@@ -620,8 +747,6 @@ def doc_stats_from_postings(
     posting of the doc is present). Same closed-form math as
     `Indexer.updateVSMWeights:570-623`; selected by
     ``EngineConfig.doc_stats_broadcast_max_terms``."""
-    from .query import decode_blocks  # local import: query imports this module
-
     joined = postings.join(
         vocabulary.withColumnRenamed("df", "term_df"), "term"
     )

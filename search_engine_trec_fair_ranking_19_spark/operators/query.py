@@ -1,17 +1,25 @@
 """Query-time retrieval — the Spark rebuild of `Search.search()` →
 `Retrieval.getRankedResults()` (SURVEY.md §3.2).
 
-Plan shape per query (all stock DataFrame ops + one Arrow decode UDF):
+Plan shape per query (all stock DataFrame ops, no Python per query):
 
-  tiny query-term DF (driver)  --broadcast-->  join postings blocks on term
-      (parquet row-group pruning via the term-sorted layout + pushed IN filter)
-  → decode blocks (vectorized pandas UDF) → explode (JVM)
-  → per-(term,doc) score expression (whole-stage codegen)
+  per-handle decoded-postings cache (block_id, term, docid, tf, dl)
+      [decoded once per handle by one mapInArrow pass over the compressed
+       blocks; MEMORY_ONLY, term-sorted, size-gated — `IndexTables`]
+  → term IN (query terms)  (in-memory batch pruning on the term stats)
+  → per-(term,doc) score expression with literal-map weights/idfs
+      (whole-stage codegen)
   → groupBy(docid).agg(sum)  [sparse hash agg — replaces the reference's dense
       double[N] arrays, `OkapiBM25P.java:28-29,40-43`, impossible at 10^12 docs]
   → max-normalize → optional PageRank blend (`Retrieval.sort:71-116`)
   → orderBy(desc(score), asc(docid)).limit(k)   [TakeOrderedAndProject =
       per-partition bounded heap + driver merge; tie-break is rank-critical]
+
+Block-max WAND and the block-pruned AND read the COMPRESSED blocks instead:
+they prune on block metadata (max_tf, min_dl, block ids) before decoding the
+surviving blocks with :func:`decode_blocks`. So do all paths when the decoded
+cache is over its size gate (then the SQL fast paths return None and the
+Column-API plans run).
 
 BM25+ (`OkapiBM25P.java:36-106`): every doc matching ≥1 term gets the constant
 Σ_j idf_j (the δ=1 term for ALL query terms), plus idf_j·f_j(k1+1)/(f_j+B) for
@@ -25,18 +33,15 @@ import math
 import re
 from dataclasses import dataclass
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..analysis.expansion import expand_query
 from ..config import EngineConfig
-from ..functions.codec import decode_blocks_concat
 from ..oracle.engine import merge_terms
 from ..session import local_rows_df as _local_df
-from .index_build import IndexTables
+from .index_build import IndexTables, decode_blocks
 
 TOPK_SCHEMA = T.StructType(
     [
@@ -44,62 +49,6 @@ TOPK_SCHEMA = T.StructType(
         T.StructField("score", T.DoubleType(), False),
     ]
 )
-
-_DECODE_SCHEMA = "docids array<long>, tfs array<long>, dls array<long>"
-_decode_udf_cached = None
-
-
-def _decode_udf():
-    """Block-decode pandas UDF (built lazily: registration needs a session)."""
-    global _decode_udf_cached
-    if _decode_udf_cached is None:
-
-        def decode(gaps: pd.Series, tfs: pd.Series, dls: pd.Series) -> pd.DataFrame:
-            # whole-batch decode: concat every block's buffer per stream and
-            # run ONE vectorized varint+delta pass (decode_blocks_concat) —
-            # no per-block Python beyond the C-speed join/len loop.
-            def _offs(s: pd.Series) -> np.ndarray:
-                off = np.zeros(len(s) + 1, dtype=np.int64)
-                np.cumsum(
-                    np.fromiter((len(b) for b in s), dtype=np.int64, count=len(s)),
-                    out=off[1:],
-                )
-                return off
-
-            docids, tf_arr, dl_arr, voff = decode_blocks_concat(
-                b"".join(gaps), _offs(gaps),
-                b"".join(tfs), _offs(tfs),
-                b"".join(dls), _offs(dls),
-            )
-            cuts = voff[1:-1]
-            return pd.DataFrame(
-                {
-                    "docids": np.split(docids, cuts),
-                    "tfs": np.split(tf_arr, cuts),
-                    "dls": np.split(dl_arr, cuts),
-                }
-            )
-
-        _decode_udf_cached = F.pandas_udf(decode, _DECODE_SCHEMA)
-    return _decode_udf_cached
-
-
-_SQL_DECODE_NAME = "__themis_decode_blocks"
-_sql_decode_sessions: set[str] = set()
-
-
-def _ensure_sql_decode(spark: SparkSession) -> None:
-    """Register the block-decode pandas UDF for SQL use (once per session).
-
-    Keyed by applicationId, NOT id(spark): the scaling tools create and
-    stop a session per bench arm, and CPython can reuse a freed object's
-    id — a stale hit would skip registration and break the SQL path with
-    an undefined-function error."""
-    key = spark.sparkContext.applicationId
-    if key not in _sql_decode_sessions:
-        spark.udf.register(_SQL_DECODE_NAME, _decode_udf())
-        _sql_decode_sessions.add(key)
-
 
 # terms eligible for inlining into a SQL string literal: anything except
 # quote/backslash/control chars (the parser's escape machinery). Query
@@ -132,12 +81,14 @@ def _bm25_topk_sql(
     round-trips (sql + collect). Expression tree mirrors `_bm25_raw`
     operation-for-operation (same literals via repr, same associativity),
     so scores are bit-identical — the bm25 gate entries pin that. Returns
-    None when a term can't be safely inlined (→ caller falls back)."""
+    None when a term can't be safely inlined or the decoded-postings cache
+    is over its size gate (→ caller falls back)."""
     terms = [t for t, _ in pq.terms]
     if not all(_SQL_SAFE_TERM.match(t) for t in terms):
         return None
-    _ensure_sql_decode(spark)
-    view = tables.postings_view(spark)
+    view = tables.table_view(spark, "decoded_postings")
+    if view is None:
+        return None
     in_list = ", ".join(f"'{t}'" for t in terms)
     wmap = "map(%s)" % ", ".join(
         f"'{t}', {_sql_double(w)}" for t, w in pq.terms
@@ -152,7 +103,7 @@ def _bm25_topk_sql(
         f" + {_sql_double(b)} * dl / {_sql_double(pq.avgdl)}))"
     )
     contrib = f"{imap}[term] * ({f_expr} * {_sql_double(k1 + 1.0)} / ({f_expr} + {b_expr}))"
-    sql = f"""{_posting_cte(view, in_list, with_dl=True)}
+    sql = f"""{_posting_cte(view, in_list)}
         SELECT docid, sum({contrib}) + {_sql_double(sum(pq.idfs))} AS raw
         FROM posting GROUP BY docid
         ORDER BY raw DESC, docid ASC LIMIT {int(k)}
@@ -160,17 +111,12 @@ def _bm25_topk_sql(
     return spark.sql(sql).collect()
 
 
-def _posting_cte(view: str, in_list: str, with_dl: bool) -> str:
-    """Shared decode CTE for the single-statement SQL query paths."""
-    dl = ", d.d.dls[p.i] AS dl" if with_dl else ""
+def _posting_cte(view: str, in_list: str) -> str:
+    """Shared postings CTE of the single-statement SQL query paths: a term
+    filter over the decoded-postings view (unused columns are pruned)."""
     return f"""
-        WITH dec AS (
-          SELECT term, {_SQL_DECODE_NAME}(gaps, tfs, dls) AS d
-          FROM {view} WHERE term IN ({in_list})
-        ),
-        posting AS (
-          SELECT term, p.docid AS docid, d.d.tfs[p.i] AS tf{dl}
-          FROM dec d LATERAL VIEW posexplode(d.d.docids) p AS i, docid
+        WITH posting AS (
+          SELECT term, docid, tf, dl FROM {view} WHERE term IN ({in_list})
         )"""
 
 
@@ -188,8 +134,9 @@ def _vsm_topk_sql(
     terms = [t for t, _ in pq.terms]
     if not all(_SQL_SAFE_TERM.match(t) for t in terms):
         return None
-    _ensure_sql_decode(spark)
-    pview = tables.postings_view(spark)
+    pview = tables.table_view(spark, "decoded_postings")
+    if pview is None:
+        return None
     sview = tables.table_view(spark, "doc_stats")
     in_list = ", ".join(f"'{t}'" for t in terms)
     wmap = "map(%s)" % ", ".join(
@@ -205,7 +152,7 @@ def _vsm_topk_sql(
         f"{qwmap}[posting.term] * ((posting.tf * {wmap}[posting.term]"
         f" / s.max_tf) * {imap}[posting.term])"
     )
-    sql = f"""{_posting_cte(pview, in_list, with_dl=False)}
+    sql = f"""{_posting_cte(pview, in_list)}
         SELECT posting.docid AS docid,
                sum({contrib}) / (first(s.vsm_weight) * {_sql_double(q_norm)}) AS raw
         FROM posting JOIN {sview} s ON posting.docid = s.docid
@@ -296,36 +243,19 @@ def prepare_query(
     return PreparedQuery(terms, dfs, idfs, n_docs, avgdl)
 
 
-def decode_blocks(blocks: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
-    """Decode + explode posting-block rows to (*keep, term, docid, tf, dl).
-
-    ``keep`` carries extra block-level columns (e.g. ``block_id`` for the
-    batched WAND's per-(qid, block) survivor semi-join) through the explode."""
-    dec = blocks.withColumn("dec", _decode_udf()("gaps", "tfs", "dls"))
-    head = [*keep, "term"]
-    return dec.select(
-        *head,
-        F.explode(
-            F.arrays_zip(
-                F.col("dec.docids").alias("docid"),
-                F.col("dec.tfs").alias("tf"),
-                F.col("dec.dls").alias("dl"),
-            )
-        ).alias("p"),
-    ).select(
-        *head,
-        F.col("p.docid").alias("docid"),
-        F.col("p.tf").alias("tf"),
-        F.col("p.dl").alias("dl"),
-    )
-
-
 def matched_postings(
     spark: SparkSession, tables: IndexTables, terms: list[str]
 ) -> DataFrame:
-    """J2: postings blocks of the query terms, decoded and exploded to
-    (term, docid, tf, dl) rows."""
-    return decode_blocks(tables.postings(spark).filter(F.col("term").isin(terms)))
+    """J2: the query terms' postings as (term, docid, tf, dl) rows — a
+    ``term IN`` filter over the handle's decoded-postings cache, or, when
+    that cache is over its size gate, a decode of the matching compressed
+    blocks."""
+    decoded = tables.decoded_postings(spark)
+    if decoded is None:
+        return decode_blocks(tables.postings(spark).filter(F.col("term").isin(terms)))
+    return decoded.filter(F.col("term").isin(terms)).select(
+        "term", "docid", "tf", "dl"
+    )
 
 
 def _lit_map(pairs) -> Column:

@@ -9,8 +9,10 @@ broadcast, or un-pushes the rank limit fails CI instead of surfacing as a
 import pytest
 
 from search_engine_trec_fair_ranking_19_spark.config import EngineConfig
+from search_engine_trec_fair_ranking_19_spark.operators import index_build as ib
 from search_engine_trec_fair_ranking_19_spark.operators import query as q
 from search_engine_trec_fair_ranking_19_spark.operators.index_build import (
+    IndexTables,
     build_index,
 )
 from search_engine_trec_fair_ranking_19_spark.sources.webtext import (
@@ -28,27 +30,69 @@ def tables(spark, tmp_path_factory):
     )
 
 
+@pytest.fixture(scope="module")
+def two_part(spark, tables):
+    """A second handle on the same index whose postings caches (decoded and
+    compressed) keep two partitions. The default handle's are coalesced to
+    one at this size, and a one-partition cache is SinglePartition-
+    distributed: Catalyst then plans no hash exchange above it."""
+    mp = pytest.MonkeyPatch()
+    mp.setattr(ib, "_right_size_for_cache", lambda df: df.repartition(2))
+    try:
+        h = IndexTables(tables.path, tables.config)
+        h.decoded_postings(spark)
+        h.postings(spark)
+    finally:
+        mp.undo()
+    parts = [t.decoded_postings(spark).rdd.getNumPartitions() for t in (tables, h)]
+    assert parts == [1, 2]
+    yield h
+    h.refresh()
+
+
+def _hash_exchanges(spark, handle, n: int) -> int:
+    """The pinned hash-exchange count of a plan over ``handle``'s decoded
+    postings: ``n`` over a multi-partition cache, 0 over a one-partition
+    cache (whose SinglePartition output satisfies every distribution)."""
+    return 0 if handle.decoded_postings(spark).rdd.getNumPartitions() == 1 else n
+
+
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_batch_plan_two_shuffles_and_group_limit(spark, tables):
+def _outside_cache(plan: str) -> str:
+    """A plan's text without the subtrees of its cached relations."""
+    keep, cache_depth = [], None
+    for line in plan.splitlines():
+        depth = len(line) - len(line.lstrip(" :|+-"))
+        if cache_depth is not None and depth > cache_depth:
+            continue
+        cache_depth = depth if "InMemoryRelation" in line else None
+        keep.append(line)
+    return "\n".join(keep)
+
+
+def test_batch_plan_two_shuffles_and_group_limit(spark, tables, two_part):
     """bm25_topk_batch: ONE (qid,docid) agg exchange + ONE qid window
-    exchange for ANY number of queries; both query-side frames broadcast;
-    the per-qid top-k rank filter is pushed into the sort
-    (WindowGroupLimit), so no partition materializes more than k rows per
-    qid before filtering."""
-    df = q.bm25_topk_batch(
-        spark, tables, [(1, "web search"), (2, "w00001 page"), (3, "engine")],
-        k=10,
-    )
-    plan = _plan(df)
-    # AQE wraps exchanges; count the shuffle origins
-    n_shuffles = plan.count("Exchange hashpartitioning")
-    assert n_shuffles == 2, f"expected 2 shuffles, got {n_shuffles}:\n{plan}"
-    assert "WindowGroupLimit" in plan, plan
-    assert plan.count("BroadcastExchange") == 2, plan
-    assert "SortMergeJoin" not in plan, plan
+    exchange for ANY number of queries (none over a one-partition postings
+    cache); both query-side frames broadcast; the per-qid top-k rank filter
+    is pushed into the sort (WindowGroupLimit), so no partition
+    materializes more than k rows per qid before filtering."""
+    for handle in (tables, two_part):
+        df = q.bm25_topk_batch(
+            spark, handle,
+            [(1, "web search"), (2, "w00001 page"), (3, "engine")],
+            k=10,
+        )
+        plan = _plan(df)
+        # AQE wraps exchanges; count the shuffle origins
+        n_shuffles = plan.count("Exchange hashpartitioning")
+        want = _hash_exchanges(spark, handle, 2)
+        assert n_shuffles == want, f"expected {want} shuffles, got {n_shuffles}:\n{plan}"
+        assert "WindowGroupLimit" in plan, plan
+        assert plan.count("BroadcastExchange") == 2, plan
+        assert "SortMergeJoin" not in plan, plan
 
 
 def test_sequential_topk_is_take_ordered(spark, tables):
@@ -61,15 +105,48 @@ def test_sequential_topk_is_take_ordered(spark, tables):
     assert "TakeOrderedAndProject" in plan, plan
 
 
-def test_scoring_stage_has_no_join(spark, tables):
+def test_scoring_stage_has_no_join(spark, tables, two_part):
     """Single-query scoring attaches weights/idfs as literal-map lookups —
     the raw-score plan must contain NO join of any kind (round-2 finding:
-    a broadcast join here cost one extra job per query)."""
-    pq = q.prepare_query(spark, tables, "web search engine", CFG)
-    posting = q.matched_postings(spark, tables, [t for t, _ in pq.terms])
-    plan = _plan(q._bm25_raw(spark, posting, pq, CFG))
-    assert "Join" not in plan, plan
-    assert plan.count("Exchange hashpartitioning") == 1, plan
+    a broadcast join here cost one extra job per query), and at most the
+    docid aggregation's exchange."""
+    for handle in (tables, two_part):
+        pq = q.prepare_query(spark, handle, "web search engine", CFG)
+        posting = q.matched_postings(spark, handle, [t for t, _ in pq.terms])
+        plan = _plan(q._bm25_raw(spark, posting, pq, CFG))
+        assert "Join" not in plan, plan
+        want = _hash_exchanges(spark, handle, 1)
+        assert plan.count("Exchange hashpartitioning") == want, plan
+
+
+@pytest.mark.parametrize("model", ["bm25", "vsm", "existential", "conjunctive"])
+def test_bounded_k_query_runs_no_python(spark, tables, monkeypatch, model):
+    """A bounded-k query scans the decoded-postings cache: the only Python
+    node of its executed plans is the decode INSIDE the cached relation
+    (run once, when the cache fills), none above it."""
+    fn = {
+        "bm25": q.bm25_topk,
+        "vsm": q.vsm_topk,
+        "existential": q.existential,
+        "conjunctive": q.conjunctive,
+    }[model]
+    fn(spark, tables, "web search", k=10)  # handle state loaded first
+    plans = []
+    frame_cls = type(spark.range(0))  # the session's DataFrame class
+    collect = frame_cls.collect
+
+    def spy(df):
+        rows = collect(df)
+        plans.append(_plan(df))
+        return rows
+
+    monkeypatch.setattr(frame_cls, "collect", spy)
+    fn(spark, tables, "web search", k=10)  # bounded k: runs inside the call
+    assert plans and all("InMemoryRelation" in p for p in plans), plans
+    for plan in plans:
+        outside = _outside_cache(plan)
+        for node in ("MapInArrow", "ArrowEvalPython", "BatchEvalPython"):
+            assert node not in outside, plan
 
 
 def test_postings_scan_prunes_to_term_filter(spark, tables):
@@ -127,15 +204,17 @@ def test_minhash_signature_transform_not_duplicated(spark):
     assert plan.count("xxhash64") == 2
 
 
-def test_conjunctive_is_one_shuffle_no_join(spark, tables):
+def test_conjunctive_is_one_shuffle_no_join(spark, tables, two_part):
     """conjunctive (k=None): the AND intersection is ONE count-aggregation
-    exchange over the term-pruned postings — never the naive
-    k-way chain of per-term semi-joins (k shuffles of the same postings).
-    The trailing rangepartitioning exchange is the caller-facing ORDER BY,
-    not part of the intersection."""
-    plan = _plan(q.conjunctive(spark, tables, "web search", k=None))
-    assert plan.count("Exchange hashpartitioning") == 1, plan
-    assert "Join" not in plan, plan
+    exchange over the term-pruned postings (none over a one-partition
+    postings cache) — never the naive k-way chain of per-term semi-joins
+    (k shuffles of the same postings). The trailing rangepartitioning
+    exchange is the caller-facing ORDER BY, not part of the intersection."""
+    for handle in (tables, two_part):
+        plan = _plan(q.conjunctive(spark, handle, "web search", k=None))
+        want = _hash_exchanges(spark, handle, 1)
+        assert plan.count("Exchange hashpartitioning") == want, plan
+        assert "Join" not in plan, plan
 
 
 def test_pack_sequences_single_bucket_exchange(spark):

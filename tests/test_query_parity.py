@@ -410,3 +410,60 @@ def test_sql_fast_path_used_for_bounded_k(spark, tables, monkeypatch):
         assert not calls  # k=None never routes through the SQL path
         q.bm25_topk(spark, tables, "web search", k=5, pagerank_weight=0.25).collect()
         assert not calls  # blend never routes through the SQL path
+
+
+# ---------------------------------------------------------------------------
+# Decoded-postings cache: the size gate, empty decodes, other sessions
+# ---------------------------------------------------------------------------
+
+
+def test_decode_blocks_empty_input(spark, tables):
+    """decode_blocks of an empty frame, and of a frame filtered to zero
+    rows, is 0 rows with the decoded schema (never one row per empty
+    Arrow batch)."""
+    from pyspark.sql import functions as F
+
+    blocks = tables.postings(spark)
+    for frame in (
+        spark.createDataFrame([], blocks.schema),
+        blocks.filter(F.col("term") == "zzzznotfound"),
+    ):
+        out = q.decode_blocks(frame, keep=("block_id",))
+        assert out.collect() == []
+        assert out.columns == ["block_id", "term", "docid", "tf", "dl"]
+
+
+def test_closed_size_gate_matches_decoded_cache(spark, tables, monkeypatch):
+    """With the decoded-postings size gate closed, every model decodes the
+    compressed blocks it matches per query instead — and returns
+    BIT-identical (docid, score) lists to the decoded-cache path."""
+    from search_engine_trec_fair_ranking_19_spark.operators.index_build import (
+        IndexTables,
+    )
+
+    assert tables.decoded_postings(spark) is not None  # filled before the patch
+    monkeypatch.setattr(IndexTables, "_decoded_fits", lambda self, spark: False)
+    closed = IndexTables(tables.path, tables.config)
+    assert closed.decoded_postings(spark) is None
+    matched = 0
+    for fn in (q.bm25_topk, q.vsm_topk, q.existential, q.conjunctive):
+        for query in QUERIES:
+            want = [(r["docid"], r["score"]) for r in fn(spark, tables, query, k=25).collect()]
+            got = [(r["docid"], r["score"]) for r in fn(spark, closed, query, k=25).collect()]
+            assert got == want, f"{fn.__name__} diverged on {query!r}"
+            matched += len(got)
+    assert matched > 0
+    closed.refresh()
+
+
+def test_bounded_k_in_new_session(spark, tables):
+    """Temp views are per session: bounded-k bm25 and vsm (the SQL fast
+    paths over the handle's views) run through a newSession() on the same
+    handle and return the same rows."""
+    other = spark.newSession()
+    for fn in (q.bm25_topk, q.vsm_topk):
+        for query in ("web search engine", "w19998 w19999 web"):
+            want = fn(spark, tables, query, k=10).collect()
+            assert fn(other, tables, query, k=10).collect() == want
+    # and back in the first session, whose views are still registered
+    assert q.bm25_topk(spark, tables, "page", k=5).collect()
