@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions import text_analysis as ta
 from .dedup import connected_components, ngram_jaccard_pairs
@@ -358,6 +359,18 @@ def remove_boilerplate_lines(
     return per_doc.unionByName(no_lines)
 
 
+def _hashable(dt: T.DataType) -> bool:
+    """Whether ``xxhash64`` accepts a column of this type: it rejects map and
+    variant types, also nested in arrays and structs."""
+    if isinstance(dt, (T.MapType, T.VariantType)):
+        return False
+    if isinstance(dt, T.ArrayType):
+        return _hashable(dt.elementType)
+    if isinstance(dt, T.StructType):
+        return all(_hashable(f.dataType) for f in dt.fields)
+    return True
+
+
 def latest_snapshot(
     df: DataFrame,
     key_col: str = "url",
@@ -371,27 +384,38 @@ def latest_snapshot(
     double-counts every recrawled page and lets stale extractions shadow
     fresh ones. This keeps exactly ONE row per ``key_col``: the max
     ``ts_col``, ties broken by descending ``tiebreak_col`` and finally by a
-    64-bit hash over ALL columns, so the survivor is a pure function of the
-    data (two engines / two cluster sizes / a retried stage all keep the
-    identical row — same determinism rule as :func:`cap_per_group`).  Rows
-    tied on every key INCLUDING the full-row hash are byte-identical for
-    hashing purposes, so which physical row survives is unobservable.
+    64-bit hash over the other columns, so the survivor is a pure function
+    of the data (two engines / two cluster sizes / a retried stage all keep
+    the identical row — same determinism rule as :func:`cap_per_group`).
+    Rows tied on every key INCLUDING the hash are identical for hashing
+    purposes, so which physical row survives is unobservable. Map and
+    variant columns cannot be hashed and are left out of it: rows that
+    differ only there keep a dependence on partition order.
 
     Scale shape: ``row_number() == 1`` over a (key, ts desc) window is
     rewritten by Spark into WindowGroupLimit — each input partition keeps
     one candidate row per url BEFORE the exchange, so a url recrawled
     monthly for a decade ships ~1 row per upstream partition into the
     shuffle, not 120. One shuffle on the url, no joins, all columns ride
-    along untouched (the html binary is moved once, never compared).
+    along; the tiebreak hash reads every hashable non-key column once per
+    row (the html binary included).
     """
-    w = Window.partitionBy(key_col).orderBy(
+    keys = {key_col, ts_col, tiebreak_col}
+    hashed = [
+        f.name
+        for f in df.schema.fields
+        if f.name not in keys and _hashable(f.dataType)
+    ]
+    order = [
         F.col(ts_col).desc_nulls_last(),
         F.col(tiebreak_col).desc_nulls_last(),
-        # full-row hash: removes the last partition-order dependence when
-        # (ts, tiebreak) don't distinguish (e.g. identical recrawl text
-        # with differing html bytes).  xxhash64 covers binary columns.
-        F.xxhash64(*df.columns).desc(),
-    )
+    ]
+    if hashed:
+        # removes the last partition-order dependence when (ts, tiebreak)
+        # don't distinguish (e.g. identical recrawl text with differing
+        # html bytes)
+        order.append(F.xxhash64(*hashed).desc())
+    w = Window.partitionBy(key_col).orderBy(*order)
     return (
         df.withColumn("__rk", F.row_number().over(w))
         .filter(F.col("__rk") == 1)

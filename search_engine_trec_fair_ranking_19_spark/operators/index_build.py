@@ -251,12 +251,11 @@ class IndexTables:
     def table_view(self, spark, name: str) -> str | None:
         """Temp-view name over a cached table, registered in the live
         session (temp views are per session: a ``newSession()`` on the same
-        handle registers its own). Lets the single-statement SQL query paths
-        reference the SAME cached DataFrames the Column-API paths scan — one
-        `spark.sql` round-trip instead of ~260 Py4J calls of incremental plan
-        building (the driver-side half of the single-query latency floor).
-        None when the table is not cached (decoded postings over the size
-        gate)."""
+        handle registers its own). The single-query SQL statements read the
+        handle's cached DataFrames through these views, so a query's plan is
+        one `spark.sql` round-trip instead of hundreds of Py4J calls of
+        incremental plan building. None when the table is not cached
+        (decoded postings over the size gate)."""
         vname = self._view_names.get(name)
         if vname is None or not spark.catalog.tableExists(vname):
             df = self._cached(spark, name)

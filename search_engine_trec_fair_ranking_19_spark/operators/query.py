@@ -1,25 +1,38 @@
 """Query-time retrieval — the Spark rebuild of `Search.search()` →
 `Retrieval.getRankedResults()` (SURVEY.md §3.2).
 
-Plan shape per query (all stock DataFrame ops, no Python per query):
+One planner: each single-query model renders ONE SQL statement over a
+posting relation (term, docid, tf, dl),
 
-  per-handle decoded-postings cache (block_id, term, docid, tf, dl)
-      [decoded once per handle by one mapInArrow pass over the compressed
-       blocks; MEMORY_ONLY, term-sorted, size-gated — `IndexTables`]
-  → term IN (query terms)  (in-memory batch pruning on the term stats)
-  → per-(term,doc) score expression with literal-map weights/idfs
-      (whole-stage codegen)
-  → groupBy(docid).agg(sum)  [sparse hash agg — replaces the reference's dense
-      double[N] arrays, `OkapiBM25P.java:28-29,40-43`, impossible at 10^12 docs]
-  → max-normalize → optional PageRank blend (`Retrieval.sort:71-116`)
-  → orderBy(desc(score), asc(docid)).limit(k)   [TakeOrderedAndProject =
-      per-partition bounded heap + driver merge; tie-break is rank-critical]
+  SELECT docid, <raw> AS raw FROM <posting view> WHERE term IN (:t0, ...)
+  GROUP BY docid [HAVING ...]
 
-Block-max WAND and the block-pruned AND read the COMPRESSED blocks instead:
-they prune on block metadata (max_tf, min_dl, block ids) before decoding the
-surviving blocks with :func:`decode_blocks`. So do all paths when the decoded
-cache is over its size gate (then the SQL fast paths return None and the
-Column-API plans run).
+  * posting view: the handle's decoded-postings cache (decoded once per
+    handle by one mapInArrow pass; MEMORY_ONLY, term-sorted, size-gated —
+    `IndexTables`), so the IN filter prunes in-memory batches on the term
+    stats and a query runs no Python. Over the size gate, and for block-max
+    WAND's seed/survivors and the block-pruned AND, the query's own decoded
+    frame is registered as a temp view instead and the same statement runs
+    over it.
+  * query terms are bound as named parameter markers and never formatted
+    into the text, so no term needs escaping; per-term weights/idfs are
+    ``map(:t0, w0, ...)[term]`` lookups with bit-exact ``repr`` double
+    literals, constant-folded inside the scoring stage's codegen (no join,
+    no broadcast, no extra job per query).
+  * GROUP BY docid: sparse hash agg — replaces the reference's dense
+    double[N] arrays (`OkapiBM25P.java:28-29,40-43`), impossible at 10^12
+    docs.
+  * bounded k, no blend: ``ORDER BY raw DESC, docid ASC LIMIT k`` in the
+    same statement (TakeOrderedAndProject = per-partition bounded heap +
+    driver merge; the docid tie-break is rank-critical), max-normalized on
+    the k collected rows. k=None and the PageRank blend hand the
+    statement's frame to `_finalize` (`Retrieval.sort:71-116`).
+
+Each scoring formula is written once, as a SQL fragment
+(:func:`_bm25_contrib`, :func:`_vsm_contrib`): the single-query statements
+inline it over per-term lookups, block-max WAND's block bound applies it
+to (max_tf, min_dl), and the batch operators apply it with ``F.expr`` over
+their broadcast query frame's columns.
 
 BM25+ (`OkapiBM25P.java:36-106`): every doc matching ≥1 term gets the constant
 Σ_j idf_j (the δ=1 term for ALL query terms), plus idf_j·f_j(k1+1)/(f_j+B) for
@@ -29,8 +42,9 @@ unmatched terms, exactly matching the reference's math.
 
 from __future__ import annotations
 
+import contextlib
 import math
-import re
+import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -41,7 +55,8 @@ from ..analysis.expansion import expand_query
 from ..config import EngineConfig
 from ..oracle.engine import merge_terms
 from ..session import local_rows_df as _local_df
-from .index_build import IndexTables, decode_blocks
+from ..session import sql_double
+from .index_build import IndexTables, _in_session, decode_blocks
 
 TOPK_SCHEMA = T.StructType(
     [
@@ -49,152 +64,6 @@ TOPK_SCHEMA = T.StructType(
         T.StructField("score", T.DoubleType(), False),
     ]
 )
-
-# terms eligible for inlining into a SQL string literal: anything except
-# quote/backslash/control chars (the parser's escape machinery). Query
-# tokenization splits on both quote chars, so real queries always qualify;
-# anything exotic just takes the Column-API path.
-_SQL_SAFE_TERM = re.compile(r"[^'\"\\\x00-\x1f]+\Z")
-
-
-def _sql_double(v: float) -> str:
-    """Bit-exact double literal (repr → correctly-rounded decimal cast)."""
-    f = float(v)
-    if f != f or f in (float("inf"), float("-inf")):
-        name = "NaN" if f != f else ("Infinity" if f > 0 else "-Infinity")
-        return f"CAST('{name}' AS DOUBLE)"
-    return f"CAST({f!r} AS DOUBLE)"
-
-
-def _bm25_topk_sql(
-    spark: SparkSession,
-    tables: IndexTables,
-    pq: PreparedQuery,
-    config: EngineConfig,
-    k: int,
-) -> list | None:
-    """Single-statement SQL twin of matched_postings → _bm25_raw → top-k.
-
-    The Column-API path spends ~0.2 s/query on ~260 Py4J round-trips of
-    incremental plan construction — more than the sf0.1 EXECUTION time of
-    the query. Building the identical logical plan as ONE SQL string is two
-    round-trips (sql + collect). Expression tree mirrors `_bm25_raw`
-    operation-for-operation (same literals via repr, same associativity),
-    so scores are bit-identical — the bm25 gate entries pin that. Returns
-    None when a term can't be safely inlined or the decoded-postings cache
-    is over its size gate (→ caller falls back)."""
-    terms = [t for t, _ in pq.terms]
-    if not all(_SQL_SAFE_TERM.match(t) for t in terms):
-        return None
-    view = tables.table_view(spark, "decoded_postings")
-    if view is None:
-        return None
-    in_list = ", ".join(f"'{t}'" for t in terms)
-    wmap = "map(%s)" % ", ".join(
-        f"'{t}', {_sql_double(w)}" for t, w in pq.terms
-    )
-    imap = "map(%s)" % ", ".join(
-        f"'{t}', {_sql_double(i)}" for (t, _), i in zip(pq.terms, pq.idfs)
-    )
-    k1, b = config.bm25_k1, config.bm25_b
-    f_expr = f"(tf * {wmap}[term])"
-    b_expr = (
-        f"({_sql_double(k1)} * ({_sql_double(1.0 - b)}"
-        f" + {_sql_double(b)} * dl / {_sql_double(pq.avgdl)}))"
-    )
-    contrib = f"{imap}[term] * ({f_expr} * {_sql_double(k1 + 1.0)} / ({f_expr} + {b_expr}))"
-    sql = f"""{_posting_cte(view, in_list)}
-        SELECT docid, sum({contrib}) + {_sql_double(sum(pq.idfs))} AS raw
-        FROM posting GROUP BY docid
-        ORDER BY raw DESC, docid ASC LIMIT {int(k)}
-    """
-    return spark.sql(sql).collect()
-
-
-def _posting_cte(view: str, in_list: str) -> str:
-    """Shared postings CTE of the single-statement SQL query paths: a term
-    filter over the decoded-postings view (unused columns are pruned)."""
-    return f"""
-        WITH posting AS (
-          SELECT term, docid, tf, dl FROM {view} WHERE term IN ({in_list})
-        )"""
-
-
-def _vsm_topk_sql(
-    spark: SparkSession,
-    tables: IndexTables,
-    pq: PreparedQuery,
-    k: int,
-    q_weights: list[float],
-    q_norm: float,
-) -> list | None:
-    """Single-statement SQL twin of vsm_topk's posting ⋈ doc_stats scoring —
-    same rationale and same bit-exactness contract as :func:`_bm25_topk_sql`
-    (expression tree mirrors the Column plan operation-for-operation)."""
-    terms = [t for t, _ in pq.terms]
-    if not all(_SQL_SAFE_TERM.match(t) for t in terms):
-        return None
-    pview = tables.table_view(spark, "decoded_postings")
-    if pview is None:
-        return None
-    sview = tables.table_view(spark, "doc_stats")
-    in_list = ", ".join(f"'{t}'" for t in terms)
-    wmap = "map(%s)" % ", ".join(
-        f"'{t}', {_sql_double(w)}" for t, w in pq.terms
-    )
-    imap = "map(%s)" % ", ".join(
-        f"'{t}', {_sql_double(i)}" for (t, _), i in zip(pq.terms, pq.idfs)
-    )
-    qwmap = "map(%s)" % ", ".join(
-        f"'{t}', {_sql_double(qw)}" for (t, _), qw in zip(pq.terms, q_weights)
-    )
-    contrib = (
-        f"{qwmap}[posting.term] * ((posting.tf * {wmap}[posting.term]"
-        f" / s.max_tf) * {imap}[posting.term])"
-    )
-    sql = f"""{_posting_cte(pview, in_list)}
-        SELECT posting.docid AS docid,
-               sum({contrib}) / (first(s.vsm_weight) * {_sql_double(q_norm)}) AS raw
-        FROM posting JOIN {sview} s ON posting.docid = s.docid
-        GROUP BY posting.docid
-        ORDER BY raw DESC, docid ASC LIMIT {int(k)}
-    """
-    return spark.sql(sql).collect()
-
-
-def _normalized_rows_df(spark: SparkSession, rows: list) -> DataFrame:
-    """(docid, raw) top-k rows → max-normalized TOPK frame, exactly like
-    _finalize's bounded-k branch (reference forces max→1 when ≤ 0,
-    `OkapiBM25P.java:91-94` / `VSM.java:113-116`)."""
-    if not rows:
-        return _local_df(spark, [], TOPK_SCHEMA)
-    max_raw = rows[0]["raw"]
-    if max_raw <= 0.0:
-        max_raw = 1.0
-    return _local_df(
-        spark, [(r["docid"], r["raw"] / max_raw) for r in rows], TOPK_SCHEMA
-    )
-
-
-def _bm25_exhaustive(
-    spark: SparkSession,
-    tables: IndexTables,
-    pq: PreparedQuery,
-    config: EngineConfig,
-    k: int | None,
-    pagerank_weight: float,
-) -> DataFrame:
-    """Exhaustive BM25+ scoring shared by bm25_topk and the WAND router's
-    fallbacks: SQL single-statement fast path when eligible (bounded k, no
-    blend), else the Column-API plan + _finalize."""
-    if k is not None and pagerank_weight == 0.0:
-        rows = _bm25_topk_sql(spark, tables, pq, config, k)
-        if rows is not None:
-            return _normalized_rows_df(spark, rows)
-    posting = matched_postings(spark, tables, [t for t, _ in pq.terms])
-    return _finalize(
-        spark, tables, _bm25_raw(spark, posting, pq, config), k, pagerank_weight
-    )
 
 
 @dataclass
@@ -258,22 +127,184 @@ def matched_postings(
     )
 
 
-def _lit_map(pairs) -> Column:
-    """[(key, value)] → constant map literal column.
-
-    Query weights/idfs are attached to postings as LITERAL map lookups, not a
-    broadcast-DF join: a query has a handful of terms, so the lookup is a
-    short constant-folded chain inside the scoring stage's codegen — no
-    broadcast exchange, no extra Spark job per query (round-2 bench: ~4 jobs
-    per query, one of which was exactly this build-and-broadcast)."""
-    return F.create_map(*[F.lit(x) for kv in pairs for x in kv])
+# ---------------------------------------------------------------------------
+# Scoring formulas, each written once as a SQL fragment over column
+# expressions. Doubles render bit-exactly and the operation order is fixed
+# here, so every path that applies one scores identically.
+# ---------------------------------------------------------------------------
 
 
-def _weight_idf_cols(pq: PreparedQuery) -> tuple[Column, Column]:
-    term = F.col("term")
-    weight = _lit_map(pq.terms)[term]
-    idf = _lit_map(zip((t for t, _ in pq.terms), pq.idfs))[term]
-    return weight, idf
+def _bm25_contrib(
+    tf: str, dl: str, weight: str, idf: str, config: EngineConfig, avgdl: float
+) -> str:
+    """One posting's BM25+ term (`OkapiBM25P.java:67-88`):
+    idf·(f·(k1+1)/(f+B)), f = tf·weight, B = k1·(1−b+b·dl/avgdl)."""
+    k1, b = config.bm25_k1, config.bm25_b
+    f = f"({tf} * {weight})"
+    norm = (
+        f"({sql_double(k1)} * ({sql_double(1.0 - b)}"
+        f" + {sql_double(b)} * {dl} / {sql_double(avgdl)}))"
+    )
+    return f"{idf} * ({f} * {sql_double(k1 + 1.0)} / ({f} + {norm}))"
+
+
+def _bm25_block_bound(
+    weight: str, idf: str, config: EngineConfig, avgdl: float
+) -> str:
+    """Block-max WAND's bound on any posting's BM25 term in a block: the term
+    is monotone ↑ in tf and ↓ in dl, so it is :func:`_bm25_contrib` at the
+    block's stored (max_tf, min_dl). idf<0 ⇒ every contribution < 0, so 0
+    is a safe bound."""
+    contrib = _bm25_contrib("max_tf", "min_dl", weight, idf, config, avgdl)
+    return f"greatest({contrib}, {sql_double(0.0)})"
+
+
+def _vsm_contrib(weight: str, idf: str, q_weight: str) -> str:
+    """One posting's VSM dot-product term: the doc-side weight
+    (tf·weight/maxTF)·idf times the query-side weight. Reads the posting's
+    ``tf`` and the doc's ``max_tf``."""
+    return f"{q_weight} * ((tf * {weight} / max_tf) * {idf})"
+
+
+def _vsm_query_weights(pq: PreparedQuery) -> tuple[list[float], float]:
+    """Query-side VSM weights (weight/max weight)·idf and their norm."""
+    max_q_freq = max(w for _, w in pq.terms)
+    q_weights = [(w / max_q_freq) * idf for (_, w), idf in zip(pq.terms, pq.idfs)]
+    return q_weights, math.sqrt(sum(w * w for w in q_weights))
+
+
+# ---------------------------------------------------------------------------
+# Single-query statements
+# ---------------------------------------------------------------------------
+
+
+def _term_args(pq: PreparedQuery) -> dict[str, str]:
+    """Bindings of a statement's term markers ``:t0, :t1, ...``."""
+    return {f"t{i}": t for i, (t, _) in enumerate(pq.terms)}
+
+
+def _term_filter(pq: PreparedQuery) -> str:
+    return "term IN (%s)" % ", ".join(f":t{i}" for i in range(len(pq.terms)))
+
+
+def _per_term(values: list[float]) -> str:
+    """The posting's query-constant per-term double: a literal map keyed by
+    the term markers (``values`` in ``pq.terms`` order)."""
+    return "map(%s)[term]" % ", ".join(
+        f":t{i}, {sql_double(v)}" for i, v in enumerate(values)
+    )
+
+
+def _bm25_sql(view: str, pq: PreparedQuery, config: EngineConfig) -> str:
+    contrib = _bm25_contrib(
+        "tf",
+        "dl",
+        _per_term([w for _, w in pq.terms]),
+        _per_term(pq.idfs),
+        config,
+        pq.avgdl,
+    )
+    return (
+        f"SELECT docid, sum({contrib}) + {sql_double(sum(pq.idfs))} AS raw"
+        f" FROM {view} WHERE {_term_filter(pq)} GROUP BY docid"
+    )
+
+
+def _vsm_sql(view: str, stats_view: str, pq: PreparedQuery) -> str:
+    q_weights, q_norm = _vsm_query_weights(pq)
+    contrib = _vsm_contrib(
+        _per_term([w for _, w in pq.terms]), _per_term(pq.idfs), _per_term(q_weights)
+    )
+    return (
+        f"SELECT p.docid AS docid,"
+        f" sum({contrib}) / (first(s.vsm_weight) * {sql_double(q_norm)}) AS raw"
+        f" FROM {view} p JOIN {stats_view} s ON p.docid = s.docid"
+        f" WHERE {_term_filter(pq)} GROUP BY p.docid"
+    )
+
+
+def _set_sql(view: str, pq: PreparedQuery, every_term: bool) -> str:
+    """Existential (any term) or conjunctive (``every_term``): raw ≡ 1.0.
+    A plain count suffices for the AND because (term, docid) is unique by
+    postings construction and the query's terms are merged; count_distinct
+    would compile to TWO exchanges (the expand + re-agg distinct rewrite)."""
+    having = f" HAVING count(1) = {len(pq.terms)}" if every_term else ""
+    return (
+        f"SELECT docid, {sql_double(1.0)} AS raw FROM {view}"
+        f" WHERE {_term_filter(pq)} GROUP BY docid{having}"
+    )
+
+
+@contextlib.contextmanager
+def _posting_view(
+    spark: SparkSession,
+    tables: IndexTables,
+    pq: PreparedQuery,
+    frame: DataFrame | None = None,
+):
+    """Name of the (term, docid, tf, dl) relation a statement reads: the
+    handle's decoded-postings view, or ``frame`` (by default, when that
+    cache is over its size gate, the query's matched blocks decoded)
+    registered as a temp view of the live session for the block. ``frame``
+    must not be a cached relation: dropping a temp view uncaches the plan
+    it names."""
+    if frame is None:
+        view = tables.table_view(spark, "decoded_postings")
+        if view is not None:
+            yield view
+            return
+        frame = matched_postings(spark, tables, [t for t, _ in pq.terms])
+    name = f"__themis_query_{uuid.uuid4().hex}"
+    _in_session(frame, spark).createOrReplaceTempView(name)
+    try:
+        yield name
+    finally:
+        spark.catalog.dropTempView(name)
+
+
+def _topk_rows(spark: SparkSession, sql: str, pq: PreparedQuery, k: int) -> list:
+    """A statement's top-k (docid, raw) rows: one Spark job."""
+    return spark.sql(
+        f"{sql} ORDER BY raw DESC, docid ASC LIMIT {int(k)}", args=_term_args(pq)
+    ).collect()
+
+
+def _rank(
+    spark: SparkSession,
+    tables: IndexTables,
+    pq: PreparedQuery,
+    render,
+    k: int | None,
+    pagerank_weight: float = 0.0,
+    frame: DataFrame | None = None,
+    const_one: bool = False,
+) -> DataFrame:
+    """Run a model's statement ``render(view)`` to a ranked (docid, score)
+    frame. ``const_one``: the raw score is the constant 1.0 (the set
+    models)."""
+    with _posting_view(spark, tables, pq, frame) as view:
+        sql = render(view)
+        if k is not None and pagerank_weight == 0.0:
+            return _normalized_rows_df(spark, _topk_rows(spark, sql, pq, k))
+        raw = spark.sql(sql, args=_term_args(pq))
+        if const_one:
+            return _finalize_const_one(raw)
+        return _finalize(spark, tables, raw, k, pagerank_weight)
+
+
+def _normalized_rows_df(spark: SparkSession, rows: list) -> DataFrame:
+    """(docid, raw) top-k rows → max-normalized TOPK frame. Normalization is
+    monotone, so the top-k order is the final order and the global max is
+    the first row; the reference forces max→1 when ≤ 0
+    (`OkapiBM25P.java:91-94` / `VSM.java:113-116`)."""
+    if not rows:
+        return _local_df(spark, [], TOPK_SCHEMA)
+    max_raw = rows[0]["raw"]
+    if max_raw <= 0.0:
+        max_raw = 1.0
+    return _local_df(
+        spark, [(r["docid"], r["raw"] / max_raw) for r in rows], TOPK_SCHEMA
+    )
 
 
 def _finalize(
@@ -283,16 +314,11 @@ def _finalize(
     k: int | None,
     pagerank_weight: float,
 ) -> DataFrame:
-    """Max-normalize, optional PageRank blend, tie-broken top-k
-    (`Retrieval.sort:71-116`).
+    """Max-normalize, optional PageRank blend, tie-broken ranking
+    (`Retrieval.sort:71-116`) for the cases the bounded-k statement does not
+    cover. No path ever collects an unbounded result set on the driver (a
+    head term at web scale matches 10^9 docs):
 
-    Plan by case — no path ever collects an unbounded result set on the
-    driver (a head term at web scale matches 10^9 docs):
-
-    * bounded k, no blend: normalization is monotone, so the top-k ORDER
-      (desc raw, asc docid) is the final order and max(raw) is the first
-      collected row — ONE Spark job (TakeOrderedAndProject), division done on
-      the k collected rows.
     * k=None (the reference's k=∞ evaluation path), no blend: scalar max agg
       (one job), then the division is applied DISTRIBUTEDLY and the sorted
       result is returned unmaterialized — the caller's action re-runs the
@@ -302,22 +328,6 @@ def _finalize(
       bounded k collects k rows, k=None localCheckpoints (distributed
       materialization) so the persisted parents can be released."""
     if pagerank_weight == 0.0:
-        if k is not None:
-            rows = (
-                raw_scores.orderBy(F.desc("raw"), F.asc("docid"))
-                .limit(k)
-                .collect()
-            )
-            if not rows:
-                return _local_df(spark, [], TOPK_SCHEMA)
-            max_raw = rows[0]["raw"]  # global max: sort desc, row 1 survives
-            if max_raw <= 0.0:
-                # the reference's running max starts at 0 and is forced to 1
-                # when nothing exceeds it (OkapiBM25P.java:91-94, VSM.java:113-116)
-                max_raw = 1.0
-            return _local_df(
-                spark, [(r["docid"], r["raw"] / max_raw) for r in rows], TOPK_SCHEMA
-            )
         max_raw = raw_scores.agg(F.max("raw")).head()[0]
         if max_raw is None:
             return _local_df(spark, [], TOPK_SCHEMA)
@@ -359,12 +369,7 @@ def _finalize(
             .orderBy(F.desc("score"), F.asc("docid"))
         )
         if k is not None:
-            rows = final.limit(k).collect()
-            return (
-                _local_df(spark, rows, TOPK_SCHEMA)
-                if rows
-                else _local_df(spark, [], TOPK_SCHEMA)
-            )
+            return _local_df(spark, final.limit(k).collect(), TOPK_SCHEMA)
         # k=None: distributed materialization, then parents can be released
         return final.localCheckpoint()
     finally:
@@ -373,24 +378,13 @@ def _finalize(
         raw_scores.unpersist()
 
 
-def _finalize_const_one(
-    spark: SparkSession, docs: DataFrame, k: int | None
-) -> DataFrame:
-    """_finalize for the set-model paths whose raw score is the CONSTANT
-    1.0 (existential / conjunctive): max-normalization is the identity
-    there (max of a constant-1 column is 1 when any row exists; the empty
-    result is empty either way), so the scalar max-agg job _finalize
-    would run per query is pure overhead — skip it. Ordering and schema
-    are identical to _finalize's k=None / bounded-k branches."""
-    out = docs.select("docid", F.lit(1.0).alias("score")).orderBy(
+def _finalize_const_one(raw: DataFrame) -> DataFrame:
+    """k=None `_finalize` of the set models, whose raw score is the CONSTANT
+    1.0: max-normalization is the identity there (max of a constant-1
+    column is 1 when any row exists; the empty result is empty either way),
+    so the scalar max-agg job `_finalize` would run is skipped."""
+    return raw.select("docid", F.lit(1.0).alias("score")).orderBy(
         F.desc("score"), F.asc("docid")
-    )
-    if k is None:
-        return out
-    return _local_df(
-        spark,
-        [(r["docid"], r["score"]) for r in out.limit(k).collect()],
-        TOPK_SCHEMA,
     )
 
 
@@ -410,29 +404,23 @@ def bm25_topk(
     pq = prepare_query(spark, tables, query, config, expander=expander)
     if not pq.terms:
         return _local_df(spark, [], TOPK_SCHEMA)
-    return _bm25_exhaustive(spark, tables, pq, config, k, pagerank_weight)
-
-
-def _bm25_raw(
-    spark: SparkSession, posting: DataFrame, pq: PreparedQuery, config: EngineConfig
-) -> DataFrame:
-    """(term, docid, tf, dl) → (docid, raw) BM25+ scores (`OkapiBM25P.java:67-88`).
-
-    Postings arrive pre-filtered to the query terms (`matched_postings`), so
-    weight/idf attach as literal-map lookups — the whole scoring is one
-    codegen stage with no join."""
-    k1, b = config.bm25_k1, config.bm25_b
-    weight, idf = _weight_idf_cols(pq)
-    f = F.col("tf") * weight
-    B = F.lit(k1) * (
-        F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(pq.avgdl)
+    return _rank(
+        spark, tables, pq, lambda v: _bm25_sql(v, pq, config), k, pagerank_weight
     )
-    contrib = idf * (f * F.lit(k1 + 1.0) / (f + B))
-    return (
-        posting.withColumn("contrib", contrib)
-        .groupBy("docid")
-        .agg((F.sum("contrib") + F.lit(sum(pq.idfs))).alias("raw"))
-    )
+
+
+def _wand_pays(pq: PreparedQuery, k: int, config: EngineConfig) -> bool:
+    """Block-max WAND routing, one predicate for the single and the batch
+    operator (measured, BENCH/wand_crossover.json): pruning pays only when
+    BOTH the decode volume clears the crossover AND the query is selective
+    — its rare terms (df ≤ N/divisor) must cover ≥ k docs so θ can rise
+    above common-only blocks' UB. ``wand_min_postings == 0`` always runs
+    WAND (tests, gate). Pure driver arithmetic on pq.dfs."""
+    if config.wand_min_postings == 0:
+        return True
+    rare_df_max = max(1, pq.n_docs // max(config.wand_rare_df_divisor, 1))
+    rare_cover = sum(df for df in pq.dfs if df <= rare_df_max)
+    return sum(pq.dfs) >= config.wand_min_postings and rare_cover >= k
 
 
 BATCH_TOPK_SCHEMA = T.StructType(
@@ -466,7 +454,7 @@ def bm25_topk_batch(
         pushed-IN filter covers the batch, so shared head terms decode once);
       * per-query weights/idfs ride a broadcast (qid, term, weight, idf)
         frame — at batch size a real broadcast join beats N literal-map
-        plans, inverting the single-query design choice (`_lit_map`);
+        plans, inverting the single-query design choice (`_per_term`);
       * scoring aggregates by (qid, docid) — one shuffle for the batch; the
         per-query additive Σidf constant (`OkapiBM25P.java:40-43` δ-term)
         joins back on qid from a second driver-sized broadcast;
@@ -492,29 +480,15 @@ def bm25_topk_batch(
     config = config or tables.config
     if pagerank_weight is None:
         pagerank_weight = config.pagerank_weight
-    pqs: dict[int, PreparedQuery] = {}
-    for qid, text in queries:
-        pq = prepare_query(spark, tables, text, config, expander=expander)
-        if pq.terms:
-            pqs[qid] = pq
+    pqs = _prepare_batch(spark, tables, queries, config, expander)
     if not pqs:
         return _local_df(spark, [], BATCH_TOPK_SCHEMA)
 
-    # per-qid routing — identical arithmetic to the single-query entry
-    # point (see bm25_topk_wand): decode volume must clear the measured
-    # crossover AND the query must be selective enough for θ to rise
     wand_pqs: dict[int, PreparedQuery] = {}
     exh_pqs: dict[int, PreparedQuery] = dict(pqs)
     if k is not None and pagerank_weight == 0.0:
-        forced = config.wand_min_postings == 0
         for qid, pq in pqs.items():
-            rare_df_max = max(
-                1, pq.n_docs // max(config.wand_rare_df_divisor, 1)
-            )
-            rare_cover = sum(df for df in pq.dfs if df <= rare_df_max)
-            if forced or (
-                sum(pq.dfs) >= config.wand_min_postings and rare_cover >= k
-            ):
+            if _wand_pays(pq, k, config):
                 wand_pqs[qid] = exh_pqs.pop(qid)
     if stats is not None:
         stats["paths"] = {
@@ -531,6 +505,22 @@ def bm25_topk_batch(
         )
     raw = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
     return _finalize_batch(spark, tables, raw, k, pagerank_weight)
+
+
+def _prepare_batch(
+    spark: SparkSession,
+    tables: IndexTables,
+    queries: list[tuple[int, str]],
+    config: EngineConfig,
+    expander,
+) -> dict[int, PreparedQuery]:
+    """qid → prepared query, for the queries with at least one term."""
+    pqs = {}
+    for qid, text in queries:
+        pq = prepare_query(spark, tables, text, config, expander=expander)
+        if pq.terms:
+            pqs[qid] = pq
+    return pqs
 
 
 def _batch_query_frames(
@@ -566,39 +556,29 @@ def _bm25_batch_raw_exhaustive(
     union_terms = sorted({t for pq in pqs.values() for t, _ in pq.terms})
     posting = matched_postings(spark, tables, union_terms)
     qt, qsum = _batch_query_frames(spark, pqs)
-    k1, b = config.bm25_k1, config.bm25_b
     avgdl = next(iter(pqs.values())).avgdl
-    f = F.col("tf") * F.col("weight")
-    B = F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl))
-    return (
-        posting.join(F.broadcast(qt), "term")
-        .withColumn("contrib", F.col("idf") * (f * F.lit(k1 + 1.0) / (f + B)))
-        .groupBy("qid", "docid")
-        .agg(F.sum("contrib").alias("contrib"))
-        .join(F.broadcast(qsum), "qid")
-        .select("qid", "docid", (F.col("contrib") + F.col("sum_idf")).alias("raw"))
-    )
+    return _batch_score(posting, qt, qsum, config, avgdl)
 
 
-def _batch_score_blocks(
-    decoded: DataFrame,  # (block_id, term, docid, tf, dl)
+def _batch_score(
+    decoded: DataFrame,  # (term, docid, tf, dl[, block_id])
     qt: DataFrame,
     qsum: DataFrame,
-    pairs: DataFrame,  # (qid, block_id) — which blocks count for which qid
-    k1: float,
-    b: float,
+    config: EngineConfig,
     avgdl: float,
+    pairs: DataFrame | None = None,  # (qid, block_id): blocks admitted per qid
 ) -> DataFrame:
-    """Score decoded postings per (qid, docid), restricted to each qid's
-    admitted (qid, block_id) pairs. The decode upstream is SHARED across
-    qids — a block decodes once however many queries admit it; the per-qid
-    fan-out happens JVM-side on the already-decoded rows."""
-    f = F.col("tf") * F.col("weight")
-    B = F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl))
+    """Score decoded postings per (qid, docid) → (qid, docid, raw). With
+    ``pairs``, each qid counts only its admitted blocks: the decode
+    upstream is SHARED across qids — a block decodes once however many
+    queries admit it; the per-qid fan-out happens JVM-side on the
+    already-decoded rows."""
+    scored = decoded.join(F.broadcast(qt), "term")
+    if pairs is not None:
+        scored = scored.join(F.broadcast(pairs), ["qid", "block_id"], "left_semi")
+    contrib = _bm25_contrib("tf", "dl", "weight", "idf", config, avgdl)
     return (
-        decoded.join(F.broadcast(qt), "term")
-        .join(F.broadcast(pairs), ["qid", "block_id"], "left_semi")
-        .withColumn("contrib", F.col("idf") * (f * F.lit(k1 + 1.0) / (f + B)))
+        scored.withColumn("contrib", F.expr(contrib))
         .groupBy("qid", "docid")
         .agg(F.sum("contrib").alias("contrib"))
         .join(F.broadcast(qsum), "qid")
@@ -639,22 +619,14 @@ def _bm25_batch_raw_wand(
         tables.postings(spark).filter(F.col("term").isin(union_terms)).persist()
     )
     qt, qsum = _batch_query_frames(spark, pqs)
-    k1, b = config.bm25_k1, config.bm25_b
     avgdl = next(iter(pqs.values())).avgdl
     group_ub = None
     try:
         # --- 1. per-(qid, block) upper bounds (JVM-only column math) ------
-        f_max = F.col("max_tf") * F.col("weight")
-        b_min = F.lit(k1) * (
-            F.lit(1.0 - b) + F.lit(b) * F.col("min_dl") / F.lit(avgdl)
-        )
-        ub_expr = F.greatest(
-            F.col("idf") * (f_max * F.lit(k1 + 1.0) / (f_max + b_min)),
-            F.lit(0.0),  # idf<0 ⇒ contribution < 0; 0 is a safe upper bound
-        )
+        ub = _bm25_block_bound("weight", "idf", config, avgdl)
         group_ub = (
             blocks.join(F.broadcast(qt), "term")
-            .withColumn("ub", ub_expr)
+            .withColumn("ub", F.expr(ub))
             .groupBy("qid", "block_id")
             .agg(F.sum("ub").alias("ub_sum"), F.max("df").alias("min_docs"))
             .join(F.broadcast(qsum), "qid")
@@ -701,9 +673,7 @@ def _bm25_batch_raw_wand(
             blocks.filter(F.col("block_id").isin(seed_ids)),
             keep=("block_id",),
         )
-        raw_seed = _batch_score_blocks(
-            dec_seed, qt, qsum, seed_pair_df, k1, b, avgdl
-        )
+        raw_seed = _batch_score(dec_seed, qt, qsum, config, avgdl, seed_pair_df)
         kth_rows = (
             raw_seed.withColumn(
                 "rn",
@@ -754,7 +724,7 @@ def _bm25_batch_raw_wand(
             ),
             keep=("block_id",),
         )
-        return _batch_score_blocks(dec, qt, qsum, surv, k1, b, avgdl)
+        return _batch_score(dec, qt, qsum, config, avgdl, surv)
     finally:
         blocks.unpersist()
         if group_ub is not None:
@@ -818,21 +788,20 @@ def bm25_topk_wand(
 
     The reference scores every posting exhaustively (`OkapiBM25P.java:51-88`);
     this is the scale extension from SURVEY.md §4 / the north rule. Spark-first
-    shape (no per-posting driver work, three tiny scalar collects):
+    shape (no per-posting driver work, three tiny collects):
 
       1. **Metadata pass (JVM only).** For each (term, block_id) block of the
          query terms, an upper bound on the per-doc BM25 contribution from the
-         stored `max_tf` / `min_dl` — the BM25 tf-term is monotone ↑ in tf and
-         ↓ in dl, so ub = idf·(f_max·(k1+1)/(f_max+B_min)) (0 when idf<0).
-         Summing over terms per block_id gives UB(group) ≥ best possible raw
-         score of any doc in that docid range. Pure column math on the blocks
-         table — the gaps/tfs/dls binaries are never touched.
+         stored `max_tf` / `min_dl` (:func:`_bm25_block_bound`). Summing over
+         terms per block_id gives UB(group) ≥ best possible raw score of any
+         doc in that docid range. Pure column math on the compressed-postings
+         view — the gaps/tfs/dls binaries are never touched.
       2. **Seed.** Decode only the top groups by UB (enough to cover ≥ k docs),
          score exactly, take the k-th raw score as threshold θ.
       3. **Prune + exact.** Keep groups with UB ≥ θ (distributed filter on the
-         metadata), decode + score only those, and take the final
-         `orderBy(desc, asc docid).limit(k)` (TakeOrderedAndProject = bounded
-         per-partition min-heap + driver merge).
+         metadata), decode + score only those with the bm25 statement
+         (`ORDER BY raw DESC, docid ASC LIMIT k`: TakeOrderedAndProject =
+         bounded per-partition min-heap + driver merge).
 
     Any pruned doc scores ≤ UB(group) < θ ≤ true k-th score, so the result —
     including the max-normalization constant, whose argmax doc always survives
@@ -848,52 +817,29 @@ def bm25_topk_wand(
     pq = prepare_query(spark, tables, query, config)
     if not pq.terms:
         return _local_df(spark, [], TOPK_SCHEMA)
-    if pagerank_weight != 0.0:
-        if stats is not None:
-            stats["fallback"] = "exhaustive_pagerank_blend"
-        return _bm25_exhaustive(spark, tables, pq, config, k, pagerank_weight)
-    # routing (measured, BENCH/wand_crossover.json): pruning pays only when
-    # BOTH the decode volume clears the crossover AND the query is selective
-    # — its rare terms (df ≤ N/divisor) must cover ≥ k docs so θ can rise
-    # above common-only blocks' UB. Pure driver arithmetic on pq.dfs.
-    rare_df_max = max(1, pq.n_docs // max(config.wand_rare_df_divisor, 1))
-    rare_cover = sum(df for df in pq.dfs if df <= rare_df_max)
-    forced = config.wand_min_postings == 0  # tests/gate: always run real WAND
-    if not forced and (
-        sum(pq.dfs) < config.wand_min_postings or rare_cover < k
-    ):
-        # pruning overhead > decode cost, or θ cannot rise — exhaustive
-        if stats is not None:
-            stats["fallback"] = "exhaustive"
-        return _bm25_exhaustive(spark, tables, pq, config, k, 0.0)
-    k1, b = config.bm25_k1, config.bm25_b
-    sum_idf = sum(pq.idfs)
-    terms = [t for t, _ in pq.terms]
 
-    blocks = (
-        tables.postings(spark)
-        .filter(F.col("term").isin(terms))
-        .persist()
-    )
-    try:
-        weight, idf = _weight_idf_cols(pq)
-        f_max = F.col("max_tf") * weight
-        b_min = F.lit(k1) * (
-            F.lit(1.0 - b) + F.lit(b) * F.col("min_dl") / F.lit(pq.avgdl)
-        )
-        ub_expr = F.greatest(
-            idf * (f_max * F.lit(k1 + 1.0) / (f_max + b_min)),
-            F.lit(0.0),  # idf<0 ⇒ contribution < 0; 0 is a safe upper bound
-        )
-        group_ub = (
-            blocks.withColumn("ub", ub_expr)
-            .groupBy("block_id")
-            .agg(
-                (F.sum("ub") + F.lit(sum_idf)).alias("group_ub"),
-                F.max("df").alias("min_docs"),  # ≥ distinct docs via one term
+    def bm25(view: str) -> str:
+        return _bm25_sql(view, pq, config)
+
+    if pagerank_weight != 0.0 or not _wand_pays(pq, k, config):
+        if stats is not None:
+            stats["fallback"] = (
+                "exhaustive" if pagerank_weight == 0.0 else "exhaustive_pagerank_blend"
             )
-        ).persist()
+        return _rank(spark, tables, pq, bm25, k, pagerank_weight)
 
+    blocks = tables.postings(spark).filter(F.col("term").isin([t for t, _ in pq.terms]))
+    bound = _bm25_block_bound(
+        _per_term([w for _, w in pq.terms]), _per_term(pq.idfs), config, pq.avgdl
+    )
+    group_ub = spark.sql(
+        f"SELECT block_id, sum({bound}) + {sql_double(sum(pq.idfs))} AS group_ub,"
+        # ≥ distinct docs reachable via one term
+        f" max(df) AS min_docs FROM {tables.table_view(spark, 'postings')}"
+        f" WHERE {_term_filter(pq)} GROUP BY block_id",
+        args=_term_args(pq),
+    ).persist()
+    try:
         # seed: prefix of groups (by UB desc) holding ≥ 4k docs AND spanning
         # ≥ min(k, available) groups. Both floors matter: overshooting k docs
         # keeps a coarse block's common-term crowd from dominating θ, and the
@@ -916,21 +862,12 @@ def bm25_topk_wand(
             covered += r["min_docs"]
             if covered >= 4 * k and len(seed_ids) >= min_groups:
                 break
-        seed_raw = _bm25_raw(
-            spark,
-            decode_blocks(blocks.filter(F.col("block_id").isin(seed_ids))),
-            pq,
-            config,
-        )
-        kth = (
-            seed_raw.orderBy(F.desc("raw"), F.asc("docid"))
-            .limit(k)
-            .agg(F.min("raw"), F.count(F.lit(1)))
-            .head()
-        )
-        theta, n_seed = kth[0], kth[1]
+        seed = decode_blocks(blocks.filter(F.col("block_id").isin(seed_ids)))
+        with _posting_view(spark, tables, pq, seed) as view:
+            seed_top = _topk_rows(spark, bm25(view), pq, k)
+        theta = seed_top[-1]["raw"] if seed_top else None
 
-        if theta is None or n_seed < k:
+        if theta is None or len(seed_top) < k:
             survivors = blocks  # not enough docs to fill k: no safe pruning
         else:
             keep = group_ub.filter(F.col("group_ub") >= F.lit(theta)).select(
@@ -944,10 +881,8 @@ def bm25_topk_wand(
             stats["n_blocks_survived"] = survivors.count()
             stats["n_seed_groups"] = len(seed_ids)
 
-        raw = _bm25_raw(spark, decode_blocks(survivors), pq, config)
-        return _finalize(spark, tables, raw, k, 0.0)
+        return _rank(spark, tables, pq, bm25, k, frame=decode_blocks(survivors))
     finally:
-        blocks.unpersist()
         group_ub.unpersist()
 
 
@@ -969,41 +904,10 @@ def vsm_topk(
     pq = prepare_query(spark, tables, query, config, expander=expander)
     if not pq.terms:
         return _local_df(spark, [], TOPK_SCHEMA)
-
-    max_q_freq = max(w for _, w in pq.terms)
-    q_weights = [
-        (w / max_q_freq) * idf for (_, w), idf in zip(pq.terms, pq.idfs)
-    ]
-    q_norm = math.sqrt(sum(w * w for w in q_weights))
-
-    if k is not None and pagerank_weight == 0.0:
-        rows = _vsm_topk_sql(spark, tables, pq, k, q_weights, q_norm)
-        if rows is not None:
-            return _normalized_rows_df(spark, rows)
-
-    posting = matched_postings(spark, tables, [t for t, _ in pq.terms])
-    weight, idf = _weight_idf_cols(pq)
-    q_weight = _lit_map(
-        zip((t for t, _ in pq.terms), q_weights)
-    )[F.col("term")]
-    stats = tables.doc_stats(spark).select("docid", "max_tf", "vsm_weight")
-    # doc-side weight per (term, doc): (tf*weight/maxTF)·idf, dotted with q_weight
-    raw = (
-        posting.join(stats, "docid")
-        .withColumn(
-            "contrib",
-            q_weight
-            * ((F.col("tf") * weight / F.col("max_tf")) * idf),
-        )
-        .groupBy("docid")
-        .agg(
-            (
-                F.sum("contrib")
-                / (F.first("vsm_weight") * F.lit(q_norm))
-            ).alias("raw")
-        )
+    stats_view = tables.table_view(spark, "doc_stats")
+    return _rank(
+        spark, tables, pq, lambda v: _vsm_sql(v, stats_view, pq), k, pagerank_weight
     )
-    return _finalize(spark, tables, raw, k, pagerank_weight)
 
 
 def vsm_topk_batch(
@@ -1023,23 +927,14 @@ def vsm_topk_batch(
     config = config or tables.config
     if pagerank_weight is None:
         pagerank_weight = config.pagerank_weight
-    pqs: dict[int, PreparedQuery] = {}
-    for qid, text in queries:
-        pq = prepare_query(spark, tables, text, config, expander=expander)
-        if pq.terms:
-            pqs[qid] = pq
+    pqs = _prepare_batch(spark, tables, queries, config, expander)
     if not pqs:
         return _local_df(spark, [], BATCH_TOPK_SCHEMA)
 
     qt_rows, qn_rows = [], []
     for qid, pq in pqs.items():
-        max_q_freq = max(w for _, w in pq.terms)
-        q_weights = [
-            (w / max_q_freq) * idf for (_, w), idf in zip(pq.terms, pq.idfs)
-        ]
-        qn_rows.append(
-            (qid, float(math.sqrt(sum(w * w for w in q_weights))))
-        )
+        q_weights, q_norm = _vsm_query_weights(pq)
+        qn_rows.append((qid, q_norm))
         qt_rows += [
             (qid, t, float(w), float(idf), float(qw))
             for ((t, w), idf, qw) in zip(pq.terms, pq.idfs, q_weights)
@@ -1055,11 +950,7 @@ def vsm_topk_batch(
     raw = (
         posting.join(F.broadcast(qt), "term")
         .join(stats, "docid")
-        .withColumn(
-            "contrib",
-            F.col("q_weight")
-            * ((F.col("tf") * F.col("weight") / F.col("max_tf")) * F.col("idf")),
-        )
+        .withColumn("contrib", F.expr(_vsm_contrib("weight", "idf", "q_weight")))
         .groupBy("qid", "docid")
         .agg((F.sum("contrib") / F.first("vsm_weight")).alias("dot"))
         .join(F.broadcast(qn), "qid")
@@ -1076,17 +967,16 @@ def existential(
     config: EngineConfig | None = None,
 ) -> DataFrame:
     """Existential model (`Existential.java:28-59`): docs containing ANY query
-    term, score ≡ 1.0 — semi-join + distinct (J7)."""
+    term, score ≡ 1.0 — one GROUP BY docid over the term-filtered postings
+    (J7)."""
     config = config or tables.config
     pq = prepare_query(spark, tables, query, config)
     if not pq.terms:
         return _local_df(spark, [], TOPK_SCHEMA)
-    docs = (
-        matched_postings(spark, tables, [t for t, _ in pq.terms])
-        .select("docid")
-        .distinct()
+    return _rank(
+        spark, tables, pq, lambda v: _set_sql(v, pq, every_term=False), k,
+        const_one=True,
     )
-    return _finalize_const_one(spark, docs, k)
 
 
 # rarest-term DF bound for conjunctive block pruning: a term occupies at
@@ -1118,15 +1008,11 @@ def conjunctive(
     intersection. An OOV term (DF=0) empties the result without touching the
     cluster.
 
-    Plan: ONE term-pruned postings scan → decode → `groupBy(docid)` counting
-    matched terms == n — a single shuffle with map-side partial agg. A plain
-    `count` suffices because (term, docid) is unique by postings
-    construction (A4 aggregates per term; the query's term set is deduped),
-    and `count_distinct` here would compile to TWO exchanges (the expand +
-    re-agg distinct rewrite). The naive alternative (a k-way chain of
-    per-term semi-joins) is k shuffles of the same postings; the most
-    selective term bounds the output exactly as in the reference's
-    heap-merge engines.
+    Plan: ONE term-pruned postings scan → `GROUP BY docid HAVING count = n`
+    — a single shuffle with map-side partial agg (:func:`_set_sql`). The
+    naive alternative (a k-way chain of per-term semi-joins) is k shuffles
+    of the same postings; the most selective term bounds the output exactly
+    as in the reference's heap-merge engines.
 
     Block-intersection pruning (the AND twin of WAND): ``block_id =
     docid // block_size`` is a GLOBAL docid bucketing, so a doc can
@@ -1177,8 +1063,9 @@ def conjunctive(
         total_blocks = -(-pq.n_docs // config.postings_block_size)
         if len(blk) * 2 > total_blocks:
             blk = None
+    frame = None
     if blk is not None:
-        posting = decode_blocks(
+        frame = decode_blocks(
             tables.postings(spark).filter(
                 F.col("term").isin(terms) & F.col("block_id").isin(blk)
             )
@@ -1186,17 +1073,12 @@ def conjunctive(
         if stats is not None:
             stats["conjunctive"] = "block_pruned"
             stats["n_candidate_blocks"] = len(blk)
-    else:
-        posting = matched_postings(spark, tables, terms)
-        if stats is not None:
-            stats["conjunctive"] = "exhaustive"
-    docs = (
-        posting.groupBy("docid")
-        .agg(F.count(F.lit(1)).alias("nt"))
-        .filter(F.col("nt") == len(terms))
-        .select("docid")
+    elif stats is not None:
+        stats["conjunctive"] = "exhaustive"
+    return _rank(
+        spark, tables, pq, lambda v: _set_sql(v, pq, every_term=True), k,
+        frame=frame, const_one=True,
     )
-    return _finalize_const_one(spark, docs, k)
 
 
 def result_window(topk: DataFrame, start: int, end: int) -> DataFrame:

@@ -45,20 +45,25 @@ _VALUES_SQL_TYPE = {
 }
 
 
+def sql_double(v, sql_t: str = "DOUBLE") -> str:
+    """Bit-exact SQL literal of a float, as ``sql_t`` (DOUBLE or FLOAT)."""
+    f = float(v)
+    if f != f or f in (float("inf"), float("-inf")):
+        name = "NaN" if f != f else ("Infinity" if f > 0 else "-Infinity")
+        return f"CAST('{name}' AS {sql_t})"
+    # repr() is the shortest string that parses back to exactly f; the
+    # decimal literal → DOUBLE cast is correctly rounded, so the value
+    # survives bit-exactly (rank-critical for score tie-breaks)
+    return f"CAST({f!r} AS {sql_t})"
+
+
 def _values_cell(v, sql_t: str) -> str:
     if v is None:
         return f"CAST(NULL AS {sql_t})"
     if sql_t == "BOOLEAN":
         return "TRUE" if v else "FALSE"
     if sql_t in ("DOUBLE", "FLOAT"):
-        f = float(v)
-        if f != f or f in (float("inf"), float("-inf")):
-            name = "NaN" if f != f else ("Infinity" if f > 0 else "-Infinity")
-            return f"CAST('{name}' AS {sql_t})"
-        # repr() is the shortest string that parses back to exactly f; the
-        # decimal literal → DOUBLE cast is correctly rounded, so the value
-        # survives bit-exactly (rank-critical for score tie-breaks)
-        return f"CAST({f!r} AS {sql_t})"
+        return sql_double(v, sql_t)
     return f"CAST({int(v)} AS {sql_t})"
 
 

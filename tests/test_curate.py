@@ -280,6 +280,30 @@ def test_latest_snapshot_deterministic_tiebreak(spark):
     assert len(out) == 1 and out[0]["text"] == "zzz"
 
 
+def test_latest_snapshot_map_column_tie(spark):
+    """A map column (which xxhash64 rejects) rides along unhashed; rows tied
+    on (warc_ts, text) are decided by the hash of the other columns, the
+    same survivor whatever the input order."""
+    rows = [
+        ("u1", 10, "same", {"a": "1"}, b"h1"),
+        ("u1", 10, "same", {"b": "2"}, b"h2"),
+        ("u1", 10, "same", {}, b"h3"),
+        ("u2", 3, "only", {"c": "3"}, b"h4"),
+    ]
+    schema = "url string, warc_ts long, text string, headers map<string,string>, html binary"
+    want = (
+        spark.createDataFrame(rows[:3], schema)
+        .orderBy(F.xxhash64("html").desc())
+        .first()["html"]
+    )
+    for order in (rows, rows[::-1]):
+        crawl = spark.createDataFrame(order, schema).repartition(3)
+        out = {r["url"]: r for r in curate.latest_snapshot(crawl).collect()}
+        assert sorted(out) == ["u1", "u2"]
+        assert out["u1"]["html"] == want
+        assert out["u2"]["headers"] == {"c": "3"}
+
+
 def test_latest_snapshot_plan_is_window_group_limit(spark):
     crawl = spark.createDataFrame(
         [("u1", 1, "a"), ("u1", 2, "b")], "url string, warc_ts long, text string"

@@ -61,6 +61,23 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _collected_plans(spark, monkeypatch, call) -> list[str]:
+    """The executed plans of the frames ``call()`` collects, each taken just
+    before its collect (so an adaptive plan prints only its initial plan)."""
+    plans = []
+    frame_cls = type(spark.range(0))  # the session's DataFrame class
+    collect = frame_cls.collect
+
+    def spy(df):
+        plans.append(_plan(df))
+        return collect(df)
+
+    with monkeypatch.context() as m:
+        m.setattr(frame_cls, "collect", spy)
+        call()
+    return plans
+
+
 def _outside_cache(plan: str) -> str:
     """A plan's text without the subtrees of its cached relations."""
     keep, cache_depth = [], None
@@ -95,25 +112,32 @@ def test_batch_plan_two_shuffles_and_group_limit(spark, tables, two_part):
         assert "SortMergeJoin" not in plan, plan
 
 
-def test_sequential_topk_is_take_ordered(spark, tables):
+def test_sequential_topk_is_take_ordered(spark, tables, two_part, monkeypatch):
     """Bounded-k BM25: the final order+limit must be TakeOrderedAndProject
     (per-partition bounded heaps + driver merge), never a global sort."""
-    pq = q.prepare_query(spark, tables, "web search", CFG)
-    posting = q.matched_postings(spark, tables, [t for t, _ in pq.terms])
-    raw = q._bm25_raw(spark, posting, pq, CFG)
-    plan = _plan(raw.orderBy("raw").limit(10))
-    assert "TakeOrderedAndProject" in plan, plan
-
-
-def test_scoring_stage_has_no_join(spark, tables, two_part):
-    """Single-query scoring attaches weights/idfs as literal-map lookups —
-    the raw-score plan must contain NO join of any kind (round-2 finding:
-    a broadcast join here cost one extra job per query), and at most the
-    docid aggregation's exchange."""
     for handle in (tables, two_part):
-        pq = q.prepare_query(spark, handle, "web search engine", CFG)
-        posting = q.matched_postings(spark, handle, [t for t, _ in pq.terms])
-        plan = _plan(q._bm25_raw(spark, posting, pq, CFG))
+        q.bm25_topk(spark, handle, "web search", k=10)  # handle state loaded first
+        plans = _collected_plans(
+            spark, monkeypatch, lambda: q.bm25_topk(spark, handle, "web search", k=10)
+        )
+        assert len(plans) == 1, plans
+        assert "TakeOrderedAndProject" in plans[0], plans[0]
+
+
+def test_scoring_stage_has_no_join(spark, tables, two_part, monkeypatch):
+    """Single-query scoring attaches weights/idfs as literal-map lookups —
+    the bounded-k bm25 plan must contain NO join of any kind (round-2
+    finding: a broadcast join here cost one extra job per query), and at
+    most the docid aggregation's exchange."""
+    for handle in (tables, two_part):
+        q.bm25_topk(spark, handle, "web search engine", k=10)
+        plans = _collected_plans(
+            spark,
+            monkeypatch,
+            lambda: q.bm25_topk(spark, handle, "web search engine", k=10),
+        )
+        assert len(plans) == 1, plans
+        plan = plans[0]
         assert "Join" not in plan, plan
         want = _hash_exchanges(spark, handle, 1)
         assert plan.count("Exchange hashpartitioning") == want, plan
@@ -131,17 +155,10 @@ def test_bounded_k_query_runs_no_python(spark, tables, monkeypatch, model):
         "conjunctive": q.conjunctive,
     }[model]
     fn(spark, tables, "web search", k=10)  # handle state loaded first
-    plans = []
-    frame_cls = type(spark.range(0))  # the session's DataFrame class
-    collect = frame_cls.collect
-
-    def spy(df):
-        rows = collect(df)
-        plans.append(_plan(df))
-        return rows
-
-    monkeypatch.setattr(frame_cls, "collect", spy)
-    fn(spark, tables, "web search", k=10)  # bounded k: runs inside the call
+    # bounded k: the query runs inside the call
+    plans = _collected_plans(
+        spark, monkeypatch, lambda: fn(spark, tables, "web search", k=10)
+    )
     assert plans and all("InMemoryRelation" in p for p in plans), plans
     for plan in plans:
         outside = _outside_cache(plan)

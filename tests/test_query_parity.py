@@ -226,6 +226,27 @@ def test_topk_result_is_driver_local(spark, tables):
         assert df.rdd.getNumPartitions() <= max(1, len(rows))
 
 
+@pytest.mark.parametrize(
+    "model, max_jobs",
+    [("bm25", 1), ("vsm", 2), ("existential", 1), ("conjunctive", 1)],
+)
+def test_bounded_k_query_jobs(spark, tables, model, max_jobs):
+    """Perf contract: a bounded-k query is one SQL statement, so it runs one
+    Spark job (vsm: two, the first broadcasts doc_stats for the join)."""
+    fn = {
+        "bm25": q.bm25_topk,
+        "vsm": q.vsm_topk,
+        "existential": q.existential,
+        "conjunctive": q.conjunctive,
+    }[model]
+    fn(spark, tables, "web search", k=10)  # handle state loaded first
+    jst = spark.sparkContext._jsc.sc().statusTracker()
+    last = max(jst.getJobIdsForGroup(None), default=-1)
+    rows = fn(spark, tables, "web search", k=10).collect()
+    jobs = [j for j in jst.getJobIdsForGroup(None) if j > last]
+    assert rows and len(jobs) <= max_jobs, (len(rows), jobs)
+
+
 # ---------------------------------------------------------------------------
 # Batch retrieval: one distributed pass over N queries, rank-identical per
 # qid to the sequential path
@@ -375,43 +396,6 @@ def test_bm25_batch_wand_actually_prunes(spark, tmp_path):
             assert gs == pytest.approx(es, abs=1e-9), f"qid {qid} doc {gd}"
 
 
-def test_sql_fast_path_matches_column_path(spark, tables, monkeypatch):
-    """The single-statement SQL fast paths (bm25 + vsm, bounded k, no blend)
-    must return BIT-identical (docid, score) lists to the Column-API plans
-    they replace — same literals via repr, same associativity, so not just
-    approx-equal: exactly equal."""
-    def run_both(fn, sql_name, query, k=25):
-        fast = [(r["docid"], r["score"]) for r in fn(spark, tables, query, k=k).collect()]
-        with monkeypatch.context() as m:
-            m.setattr(q, sql_name, lambda *a, **kw: None)  # force fallback
-            slow = [(r["docid"], r["score"]) for r in fn(spark, tables, query, k=k).collect()]
-        assert fast == slow, f"{fn.__name__} diverged on {query!r}"
-        return len(fast)
-
-    matched = 0
-    for query in QUERIES:
-        matched += run_both(q.bm25_topk, "_bm25_topk_sql", query)
-        matched += run_both(q.vsm_topk, "_vsm_topk_sql", query)
-    assert matched > 0  # the set must exercise non-empty results
-
-
-def test_sql_fast_path_used_for_bounded_k(spark, tables, monkeypatch):
-    """Routing contract: bounded k + no blend takes the SQL path; k=None and
-    blended queries fall back to the Column plan (normalization/blend live
-    there)."""
-    calls = []
-    real = q._bm25_topk_sql
-    with monkeypatch.context() as m:
-        m.setattr(q, "_bm25_topk_sql", lambda *a, **kw: calls.append(1) or real(*a, **kw))
-        q.bm25_topk(spark, tables, "web search", k=5).collect()
-        assert calls  # used
-        calls.clear()
-        q.bm25_topk(spark, tables, "web search", k=None).collect()
-        assert not calls  # k=None never routes through the SQL path
-        q.bm25_topk(spark, tables, "web search", k=5, pagerank_weight=0.25).collect()
-        assert not calls  # blend never routes through the SQL path
-
-
 # ---------------------------------------------------------------------------
 # Decoded-postings cache: the size gate, empty decodes, other sessions
 # ---------------------------------------------------------------------------
@@ -467,3 +451,58 @@ def test_bounded_k_in_new_session(spark, tables):
             assert fn(other, tables, query, k=10).collect() == want
     # and back in the first session, whose views are still registered
     assert q.bm25_topk(spark, tables, "page", k=5).collect()
+
+
+EXOTIC_QUERIES = [
+    "web zero\x00byte",                    # NUL: a delimiter on neither side
+    "web it's \"quoted\"",                 # quotes (query delimiters)
+    "web back\\slash",                     # backslash: kept whole by the query split
+    "web new\nline tab\tbed",              # control characters
+    "web ' OR 1=1 --",                     # injection-shaped
+    "web café naïve 東京",                  # non-ASCII
+    "zero\x00byte café back\\slash ' OR 1=1 -- web",
+]
+
+
+def test_exotic_terms_match_oracle(spark, tmp_path, monkeypatch):
+    """Query terms are bound as parameter markers, never formatted into SQL
+    text: terms holding quotes, backslashes, NUL, newlines, SQL-injection
+    shapes or non-ASCII text rank exactly like the oracle in every model, at
+    k=10 and k=None, with the decoded-postings cache open and closed. One
+    corpus doc holds a NUL-bearing token, so that term matches a posting."""
+    from search_engine_trec_fair_ranking_19_spark.operators.index_build import (
+        IndexTables,
+    )
+
+    cfg = EngineConfig(postings_block_size=16, wand_min_postings=0)
+    docs = [
+        (f"u{i:03d}", f"web page{i % 7} " + extra)
+        for i, extra in enumerate(
+            ["zero\x00byte café", "naïve 東京 web", "tab bed line", "zero\x00byte"]
+            + [f"filler{j} new" for j in range(36)]
+        )
+    ]
+    webtext = spark.createDataFrame(docs, "url string, text string")
+    opened = build_index(spark, webtext, str(tmp_path / "exotic"), cfg)
+    oidx = oracle.build_index(docs, cfg)
+    assert opened.decoded_postings(spark) is not None
+    monkeypatch.setattr(IndexTables, "_decoded_fits", lambda self, spark: False)
+    closed = IndexTables(opened.path, opened.config)
+    assert closed.decoded_postings(spark) is None
+
+    models = [
+        (q.bm25_topk, oracle.bm25_topk),
+        (q.vsm_topk, oracle.vsm_topk),
+        (q.existential, oracle.existential),
+        (q.conjunctive, oracle.conjunctive),
+    ]
+    nul_hits = 0
+    for handle in (opened, closed):
+        for fn, ofn in models:
+            for query in EXOTIC_QUERIES:
+                for k in (10, None):
+                    exp = ofn(oidx, query, k=k)
+                    _assert_matches(fn(spark, handle, query, k=k), exp, k)
+        nul_hits += len(q.conjunctive(spark, handle, "web zero\x00byte").collect())
+    assert nul_hits == 4  # docs 0 and 3, through both handles
+    closed.refresh()
