@@ -5,10 +5,12 @@ Runs the headline pipeline at ``$SPARK_GRAFT_SF_DIR`` (default
 line: {"metric": ..., "value": <total sec>, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
-Admission protocol (shared with tools/scaling_bench.py — same constants,
-same prober): this VM's first-touch page-fault throughput collapses >100x
-on a minutes timescale (measured 6 MB/s … 5.9 GB/s; BENCH/BASELINE.md), so
-a stage timed inside a collapsed window measures the host, not the plan.
+Admission protocol (defined in this module and nowhere else:
+``ARM_REPRO_MAX``, ``HEALTH_FLOOR_MBPS``, ``host_fault_mbps`` and the
+in-flight ``_ArmProber``): the measured VM's first-touch page-fault
+throughput collapses >100x on a minutes timescale (measured 6 MB/s …
+5.9 GB/s; BENCH/BASELINE.md), so a stage timed inside a collapsed window
+measures the host, not the plan.
 Every stage here therefore runs as a min-of-2 pair inside an in-flight
 probe window and is ADMITTED only when
 
@@ -72,16 +74,9 @@ import time
 
 _REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, _REPO)
-sys.path.insert(0, os.path.join(_REPO, "tools"))
 
 from pyspark.sql import functions as F
 
-from scaling_bench import (  # single source of truth for admission params
-    ARM_REPRO_MAX,
-    HEALTH_FLOOR_MBPS,
-    _ArmProber,
-    host_fault_mbps,
-)
 from search_engine_trec_fair_ranking_19_spark.entry_queries import (
     GATE_CONFIG,
     documents_as_webtext,
@@ -102,6 +97,68 @@ from search_engine_trec_fair_ranking_19_spark.operators.index_build import (
     build_index,
 )
 from search_engine_trec_fair_ranking_19_spark.session import get_spark
+
+# Admission bound on the spread of a stage's two runs. The two runs are
+# identical work; a spread past this means the host window shifted
+# mid-pair. Calibration: self-consistent pairs spread <=1.38; pairs that
+# demonstrably straddled a collapse spread 1.47-3.0 (BENCH/BASELINE.md).
+ARM_REPRO_MAX = 1.45
+
+# Admission floor for the median in-flight fault throughput. Healthy
+# windows on the measured VM read 2000-5900 MB/s; degraded ones 6-300. 500
+# sits in the gap: a stage whose median sample clears it spent most of its
+# wall time out of the degraded regime.
+HEALTH_FLOOR_MBPS = 500.0
+
+
+def host_fault_mbps(mb: int = 100) -> float:
+    """First-touch page-fault throughput of THIS VM right now (MB/s).
+
+    The measured VM's on-demand memory path degrades transiently by >100x
+    (measured 6 MB/s to 5.9 GB/s for first touch of fresh pages within
+    minutes). Every trial records this so bench consumers can tell a slow
+    CODE path from a slow HOST window."""
+    import numpy as np
+
+    t0 = time.time()
+    a = np.empty(mb * 1_000_000, dtype=np.uint8)
+    a[::4096] = 1
+    dt = time.time() - t0
+    del a
+    return round(mb / dt, 1)
+
+
+class _ArmProber:
+    """Samples host first-touch throughput every ``interval`` s in a daemon
+    thread WHILE a stage runs. Boundary probes miss intra-stage window
+    collapses (a 70 s build straddling a 6 MB/s window looks identical, at
+    its boundaries, to a clean one); these in-flight samples are what the
+    admission gate judges a stage by."""
+
+    def __init__(self, interval: float = 8.0):
+        import threading
+
+        self.samples: list[tuple[float, float]] = []  # (t, MB/s)
+        self._stop = threading.Event()
+        self._t = threading.Thread(target=self._loop, args=(interval,))
+        self._t.daemon = True
+
+    def _loop(self, interval: float) -> None:
+        while not self._stop.is_set():
+            self.samples.append((time.time(), host_fault_mbps(16)))
+            self._stop.wait(interval)
+
+    def __enter__(self):
+        self._t.start()
+        return self
+
+    def __exit__(self, *exc):
+        self._stop.set()
+        self._t.join(timeout=30)
+
+    def window(self, t0: float, t1: float) -> list[float]:
+        return [round(v, 1) for (t, v) in self.samples if t0 <= t <= t1]
+
 
 BM25_QUERIES = [
     "spark shuffle partition table",
@@ -222,6 +279,10 @@ class StageRunner:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
+    # the Python workers import the package too, from any working directory
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        filter(None, (_REPO, os.environ.get("PYTHONPATH")))
+    )
     health_before = host_fault_mbps()
     spark = get_spark(app_name="themis-bench")
     runner = StageRunner()

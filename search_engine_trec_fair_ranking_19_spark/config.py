@@ -40,38 +40,14 @@ class EngineConfig:
     # below this many candidate postings (Σ DF over query terms) the WAND
     # metadata/seed/prune passes cost more than decoding everything — fall
     # back to the exhaustive plan (0 = always run real WAND; used by tests
-    # and the correctness gate). Measured (tools/wand_crossover_bench.py →
-    # BENCH/wand_crossover.json): WAND first beats exhaustive at a 2M-doc
-    # hapax-enriched corpus, Σ DF ≈ 3.4M, on SELECTIVE queries (rare-term
-    # set covering ≥ k docs anchors θ above common-only blocks' UB — 48 of
-    # 1479 block groups survive, 1.3-1.5× net wall-clock win). The default
-    # sits just under that smallest measured winning Σ DF.
+    # and the correctness gate). Measured (BENCH/wand_crossover.json): WAND
+    # first beats exhaustive at a 2M-doc hapax-enriched corpus, Σ DF ≈ 3.4M,
+    # on SELECTIVE queries (rare-term set covering ≥ k docs anchors θ above
+    # common-only blocks' UB — 48 of 1479 block groups survive, 1.3-1.5× net
+    # wall-clock win). The default sits just under that smallest measured
+    # winning Σ DF. The second routing condition, selectivity, is
+    # ``query.WAND_RARE_DF_DIVISOR``.
     wand_min_postings: int = 3_000_000
-
-    # ...but volume alone cannot make pruning pay: the same bench shows
-    # all-common-term queries at Σ DF up to 6M LOSING under WAND (every
-    # block's UB stays above θ; 1956/1956 groups survive). The second
-    # routing condition is measured selectivity: the query's rare terms
-    # (DF ≤ n_docs / wand_rare_df_divisor, i.e. idf ≳ ln(divisor)) must
-    # together cover ≥ k docs, otherwise θ is anchored by common-term docs
-    # and no group prunes (a single hapax term cannot lift the k-th best).
-    # Driver-side arithmetic on the already-fetched per-term DFs — zero jobs.
-    wand_rare_df_divisor: int = 1000
-
-    # build-time doc_stats join strategy: up to this many vocabulary terms
-    # the per-term DF broadcasts onto the cached token stream (one docid
-    # agg, no extra shuffle); above it — a web-scale vocabulary can't be
-    # broadcast, and Catalyst's silent fallback would reshuffle the whole
-    # token stream by term — DF joins the 4096x-smaller postings BLOCKS
-    # table instead (doc_stats_from_postings)
-    doc_stats_broadcast_max_terms: int = 2_000_000
-
-    # query-time vocabulary handling: up to this many terms the whole
-    # vocabulary is loaded into a driver dict (the reference's query-time
-    # HashMap, `Indexer.java:643-651`); above it, term lookups fall back to a
-    # pushed-IN-filter scan of the cached vocabulary table (driver can't hold
-    # a 10^12-doc-scale vocabulary)
-    vocab_driver_cache_max_terms: int = 2_000_000
 
     def with_(self, **kw) -> "EngineConfig":
         return replace(self, **kw)

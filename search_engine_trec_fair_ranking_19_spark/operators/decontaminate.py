@@ -35,6 +35,11 @@ from pyspark.sql import functions as F
 
 from .dedup import _hashed_shingles
 
+# contaminated doc ids collected to the driver for the broadcast anti-join
+# (~8 MB of longs at the bound); above it, as on an adversarial corpus that
+# is mostly eval text, the anti-join reads the persisted hit ids instead
+DRIVER_CONTAMINATED_BUDGET = 1_000_000
+
 
 def eval_ngram_hashes(
     eval_df: DataFrame,
@@ -107,22 +112,27 @@ def decontaminate(
         text_col=text_col,
     ).filter(F.col("n_hits") >= min_hits)
     # The contaminated-id set is small by construction (it fits a
-    # broadcast), so COLLECT it and anti-join a local relation. This makes
-    # the operator eager on purpose: the probe (shingle-hash of every
-    # training row) runs exactly once, in this job, and the returned
-    # frame's plan contains a LocalTableScan instead of the probe subtree
-    # — downstream pipelines that reference the decontaminated frame in
-    # several places (prepare_training_set feeds it to both the decision
-    # frame and the base join; Spark plans no exchange reuse across those
-    # subtrees) would otherwise re-run the probe once per subtree per
-    # action. Join on the RAW id (collect preserves its type): casting
-    # would NULL out string ids and silently keep every contaminated doc.
-    contaminated = [r["doc_id"] for r in hits.collect()]
+    # broadcast), so COLLECT it (at most DRIVER_CONTAMINATED_BUDGET + 1
+    # ids) and anti-join a local relation. This makes the operator eager on
+    # purpose: the probe (shingle-hash of every training row) runs exactly
+    # once, in this job, and the returned frame's plan contains a
+    # LocalTableScan instead of the probe subtree — downstream pipelines
+    # that reference the decontaminated frame in several places
+    # (prepare_training_set feeds it to both the decision frame and the
+    # base join; Spark plans no exchange reuse across those subtrees) would
+    # otherwise re-run the probe once per subtree per action. Above the
+    # budget the ids stay persisted and the anti-join reads them: the probe
+    # still runs once, and the driver holds no ids. Join on the RAW id
+    # (collect preserves its type): casting would NULL out string ids and
+    # silently keep every contaminated doc.
+    ids = hits.select(F.col("doc_id").alias("__cid")).persist()
+    head = ids.limit(DRIVER_CONTAMINATED_BUDGET + 1).collect()
+    if len(head) > DRIVER_CONTAMINATED_BUDGET:
+        return train_df.join(ids, F.col(id_col) == F.col("__cid"), "left_anti")
+    ids.unpersist()
     spark = train_df.sparkSession
     id_type = train_df.schema[id_col].dataType.simpleString()
-    cid = spark.createDataFrame(
-        [(v,) for v in contaminated], f"__cid {id_type}"
-    )
+    cid = spark.createDataFrame([(r["__cid"],) for r in head], f"__cid {id_type}")
     return train_df.join(
         F.broadcast(cid), F.col(id_col) == F.col("__cid"), "left_anti"
     )

@@ -105,6 +105,21 @@ def _right_size_for_cache(df: DataFrame) -> DataFrame:
     return df
 
 
+# query-time vocabulary handling: up to this many terms the whole vocabulary
+# is loaded into a driver dict (the reference's query-time HashMap,
+# `Indexer.java:643-651`); above it, term lookups fall back to a pushed-IN
+# filter scan of the cached vocabulary table (the driver can't hold a
+# 10^12-doc-scale vocabulary)
+VOCAB_DRIVER_CACHE_MAX_TERMS = 2_000_000
+
+# build-time doc_stats join strategy: up to this many vocabulary terms the
+# per-term DF broadcasts onto the cached token stream (one docid agg, no
+# extra shuffle); above it (a web-scale vocabulary can't be broadcast, and
+# Catalyst's silent fallback would reshuffle the whole token stream by term)
+# DF joins the 4096x-smaller postings BLOCKS table instead
+# (doc_stats_from_postings). Also read by the streaming ingest.
+DOC_STATS_BROADCAST_MAX_TERMS = 2_000_000
+
 # bytes one cached decoded posting takes in the in-memory columnar cache
 # (compressed: term runs, small docid deltas, dictionary-coded tf/dl).
 # Measured 2.0 B on the sf0.01 gate corpus (12k postings) and 4.4 B on the
@@ -140,6 +155,23 @@ def _in_session(df: DataFrame, spark: SparkSession) -> DataFrame:
 
 
 @dataclass
+class _PathCaches:
+    """Cache bookkeeping shared by every handle on one index path. Handles on
+    one path persist identical plans, which Spark caches once, so
+    ``refresh()`` on any of them must drop the frames of all: ``persisted``
+    holds every frame persisted for the path since its last refresh, and
+    ``generation`` counts the refreshes, so a handle whose state predates
+    the last one drops it and refills on next use."""
+
+    generation: int = 0
+    persisted: list = field(default_factory=list)
+
+
+# by index path; process-wide, like the Spark cache manager it mirrors
+_PATH_CACHES: dict[str, _PathCaches] = {}
+
+
+@dataclass
 class IndexTables:
     """Handle to the on-disk index (the rebuild's INDEX_DIR).
 
@@ -170,13 +202,16 @@ class IndexTables:
     path: str
     config: EngineConfig
     io: object | None = None  # table-IO backend; None → ParquetDirIO(path)
-    # per-handle state, dropped by refresh(): cached frames by table name
-    # (None = decoded postings over the size gate), temp-view names by table
-    # name, the collection_stats row, and the driver vocabulary map
+    # per-handle state, dropped by a refresh() of any handle on the path:
+    # cached frames by table name (None = decoded postings over the size
+    # gate), temp-view names by table name, the collection_stats row, the
+    # driver vocabulary map, and the path's refresh generation it was
+    # loaded at
     _df_cache: dict = field(init=False, repr=False, compare=False, default_factory=dict)
     _view_names: dict = field(init=False, repr=False, compare=False, default_factory=dict)
     _cs_cache: dict | None = field(init=False, repr=False, compare=False, default=None)
     _vocab_map_state: tuple | None = field(init=False, repr=False, compare=False, default=None)
+    _generation: int = field(init=False, repr=False, compare=False, default=0)
 
     def _io(self):
         if self.io is None:
@@ -188,9 +223,23 @@ class IndexTables:
     def _read(self, spark: SparkSession, name: str) -> DataFrame:
         return self._io().read(spark, name)
 
+    def _path_caches(self) -> _PathCaches:
+        """The path's shared bookkeeping, after dropping this handle's state
+        if another handle on the path refreshed since it was loaded (driver
+        dict lookups only: no JVM call)."""
+        pc = _PATH_CACHES.setdefault(self.path, _PathCaches())
+        if self._generation != pc.generation:
+            self._df_cache.clear()
+            self._view_names.clear()  # re-register views over the fresh caches
+            self._cs_cache = None
+            self._vocab_map_state = None
+            self._generation = pc.generation
+        return pc
+
     def _cached(self, spark: SparkSession, name: str) -> DataFrame | None:
         from pyspark import StorageLevel
 
+        pc = self._path_caches()
         if name not in self._df_cache:
             if name != "decoded_postings":
                 df = _right_size_for_cache(self._read(spark, name))
@@ -201,9 +250,10 @@ class IndexTables:
                 )
             else:
                 df = None
-            self._df_cache[name] = (
-                None if df is None else df.persist(StorageLevel.MEMORY_ONLY)
-            )
+            if df is not None:
+                df = df.persist(StorageLevel.MEMORY_ONLY)
+                pc.persisted.append(df)
+            self._df_cache[name] = df
         return self._df_cache[name]
 
     def _decoded_fits(self, spark: SparkSession) -> bool:
@@ -219,14 +269,16 @@ class IndexTables:
         return bound <= _storage_memory_bytes(spark) / 2
 
     def refresh(self) -> None:
-        """Drop every per-handle cache (after ingest/compaction/writeback)."""
-        for df in self._df_cache.values():
-            if df is not None:
-                df.unpersist()
-        self._df_cache.clear()
-        self._view_names.clear()  # re-register views over the fresh caches
-        self._cs_cache = None
-        self._vocab_map_state = None
+        """Drop the caches of every handle on this index path (after
+        ingest/compaction/writeback): unpersist every frame persisted for
+        the path and bump its generation, so each handle on it, this one
+        included, drops its state and refills on next use instead of
+        reading an uncached plan."""
+        pc = _PATH_CACHES.setdefault(self.path, _PathCaches())
+        for df in pc.persisted:
+            df.unpersist()
+        pc.persisted.clear()
+        pc.generation += 1
 
     def doc_ids(self, spark):  # (docid long, url string)
         return self._cached(spark, "doc_ids")
@@ -256,6 +308,7 @@ class IndexTables:
         one `spark.sql` round-trip instead of hundreds of Py4J calls of
         incremental plan building. None when the table is not cached
         (decoded postings over the size gate)."""
+        self._path_caches()
         vname = self._view_names.get(name)
         if vname is None or not spark.catalog.tableExists(vname):
             df = self._cached(spark, name)
@@ -274,8 +327,9 @@ class IndexTables:
         for it). Returns None above the size cap (at 10^12-doc scale the
         vocabulary no longer fits on the driver; query paths then fall back
         to a pushed-filter scan of the cached table)."""
+        self._path_caches()
         if self._vocab_map_state is None:
-            cap = self.config.vocab_driver_cache_max_terms
+            cap = VOCAB_DRIVER_CACHE_MAX_TERMS
             t = self._read(spark, "vocabulary").limit(cap + 1).toArrow()
             m = None
             if t.num_rows <= cap:
@@ -286,6 +340,7 @@ class IndexTables:
     def collection_stats(self, spark) -> dict:
         # 1-row table, immutable once built — cache on the handle so query
         # paths don't pay a Spark job per query for N/avgdl
+        self._path_caches()
         if self._cs_cache is None:
             self._cs_cache = self._read(spark, "collection_stats").head().asDict()
         return self._cs_cache
@@ -745,7 +800,7 @@ def doc_stats_from_postings(
     inlined per posting; max_tf is the doc-global max because every
     posting of the doc is present). Same closed-form math as
     `Indexer.updateVSMWeights:570-623`; selected by
-    ``EngineConfig.doc_stats_broadcast_max_terms``."""
+    ``DOC_STATS_BROADCAST_MAX_TERMS``."""
     joined = postings.join(
         vocabulary.withColumnRenamed("df", "term_df"), "term"
     )
@@ -967,10 +1022,10 @@ def _build_index_impl(
         # parquet count() is metadata-only — choosing the join strategy
         # costs no scan. Small vocab: broadcast DF onto the cached token
         # stream (one docid agg, zero extra shuffles). Web-scale vocab
-        # (> doc_stats_broadcast_max_terms): DF joins the blocks table
+        # (> DOC_STATS_BROADCAST_MAX_TERMS): DF joins the blocks table
         # instead — see doc_stats_from_postings.
         n_terms = vocab_df.count()
-        if n_terms <= config.doc_stats_broadcast_max_terms:
+        if n_terms <= DOC_STATS_BROADCAST_MAX_TERMS:
             stats = doc_stats_table(
                 tokens, n_docs, vocabulary=F.broadcast(vocab_df)
             )

@@ -409,6 +409,16 @@ def bm25_topk(
     )
 
 
+# WAND's selectivity condition. Volume alone cannot make pruning pay: the
+# crossover bench (BENCH/wand_crossover.json) shows all-common-term queries
+# at Σ DF up to 6M LOSING under WAND (every block's UB stays above θ;
+# 1956/1956 groups survive). So the query's rare terms (DF ≤ n_docs /
+# WAND_RARE_DF_DIVISOR, i.e. idf ≳ ln(divisor)) must together cover ≥ k
+# docs, otherwise θ is anchored by common-term docs and no group prunes (a
+# single hapax term cannot lift the k-th best).
+WAND_RARE_DF_DIVISOR = 1000
+
+
 def _wand_pays(pq: PreparedQuery, k: int, config: EngineConfig) -> bool:
     """Block-max WAND routing, one predicate for the single and the batch
     operator (measured, BENCH/wand_crossover.json): pruning pays only when
@@ -418,7 +428,7 @@ def _wand_pays(pq: PreparedQuery, k: int, config: EngineConfig) -> bool:
     WAND (tests, gate). Pure driver arithmetic on pq.dfs."""
     if config.wand_min_postings == 0:
         return True
-    rare_df_max = max(1, pq.n_docs // max(config.wand_rare_df_divisor, 1))
+    rare_df_max = max(1, pq.n_docs // WAND_RARE_DF_DIVISOR)
     rare_cover = sum(df for df in pq.dfs if df <= rare_df_max)
     return sum(pq.dfs) >= config.wand_min_postings and rare_cover >= k
 

@@ -170,7 +170,7 @@ def corpus_spark_distributed(
     bench scale the closed vocabulary's RAREST term still has df ≥ the
     number of posting blocks, so no term is block-rare and block-max pruning
     structurally cannot pay; the hapax tail restores the selective-query
-    regime WAND exists for (see tools/wand_crossover_bench.py)."""
+    regime WAND exists for (see BENCH/wand_crossover.json)."""
     import pandas as pd
 
     if n_partitions is None:

@@ -59,6 +59,7 @@ from pyspark.sql import functions as F
 from ..config import DEFAULT_CONFIG, EngineConfig
 from ..session import local_rows_df
 from ..operators.index_build import (
+    DOC_STATS_BROADCAST_MAX_TERMS,
     IndexTables,
     assign_doc_ids,
     build_index,
@@ -242,7 +243,7 @@ def ingest_batch(
             # onto this batch's tokens while the vocabulary fits; at
             # web-scale vocabularies join DF against the batch's (much
             # smaller) encoded blocks instead
-            if vocab_now.count() <= config.doc_stats_broadcast_max_terms:
+            if vocab_now.count() <= DOC_STATS_BROADCAST_MAX_TERMS:
                 batch_stats = doc_stats_table(
                     tokens, n_docs, vocabulary=F.broadcast(vocab_now)
                 )

@@ -119,3 +119,31 @@ def test_decontaminate_string_ids(spark):
     )
     kept = {r["doc_id"] for r in dc.decontaminate(train, ev, n=_N).collect()}
     assert kept == {"doc00000002", "doc00000004"}
+
+
+def test_over_budget_anti_join_matches_collected_ids(spark, monkeypatch):
+    # adversarial corpus: every doc carries eval text (all-contaminated), or
+    # all but every tenth; with the driver budget below the contaminated
+    # count, the anti-join reads the persisted hit ids instead of a
+    # collected list, and keeps exactly the same rows
+    span = _EVAL[0][1]
+    schema = "doc_id long, text string"
+    ev = spark.createDataFrame(_EVAL, schema)
+    for clean_every in (None, 10):
+        train = spark.createDataFrame(
+            [
+                (d, f"doc {d} clean words only" if clean_every and d % clean_every == 0
+                 else f"doc {d} {span}")
+                for d in range(40)
+            ],
+            schema,
+        )
+        want = sorted(r["doc_id"] for r in dc.decontaminate(train, ev, n=_N).collect())
+        with monkeypatch.context() as m:
+            m.setattr(dc, "DRIVER_CONTAMINATED_BUDGET", 3)
+            kept = dc.decontaminate(train, ev, n=_N)
+            plan = kept._jdf.queryExecution().executedPlan().toString()
+            assert "InMemoryTableScan" in plan, plan  # the over-budget path ran
+            got = sorted(r["doc_id"] for r in kept.collect())
+        assert got == want
+        assert want == ([] if clean_every is None else [0, 10, 20, 30])

@@ -10,6 +10,7 @@ import pytest
 
 from search_engine_trec_fair_ranking_19_spark.config import EngineConfig
 from search_engine_trec_fair_ranking_19_spark.functions.codec import decode_block
+from search_engine_trec_fair_ranking_19_spark.operators import index_build as ib
 from search_engine_trec_fair_ranking_19_spark.operators.index_build import build_index
 from search_engine_trec_fair_ranking_19_spark.oracle import engine as oracle
 from search_engine_trec_fair_ranking_19_spark.sources.webtext import (
@@ -118,15 +119,15 @@ def test_resume_skips_completed_stages(spark, tables, oracle_index):
 
 
 def test_doc_stats_blocks_path_matches_oracle(
-    spark, corpus_pdf, oracle_index, tmp_path
+    spark, corpus_pdf, oracle_index, tmp_path, monkeypatch
 ):
     """The web-scale doc_stats path (DF joined onto the encoded blocks table,
     doc_stats_from_postings — selected when the vocabulary exceeds the
     broadcast budget) must produce the same table as the broadcast path,
     checked against the oracle with FP tolerance (summation order differs)."""
     webtext = corpus_spark(spark, N_DOCS, seed=7, n_partitions=7)
-    cfg = CFG.with_(doc_stats_broadcast_max_terms=0)  # force the blocks path
-    tables2 = build_index(spark, webtext, str(tmp_path / "blkidx"), cfg)
+    monkeypatch.setattr(ib, "DOC_STATS_BROADCAST_MAX_TERMS", 0)  # force the blocks path
+    tables2 = build_index(spark, webtext, str(tmp_path / "blkidx"), CFG)
     rows = tables2.doc_stats(spark).collect()
     assert len(rows) == sum(
         1 for v in oracle_index.token_count.values() if v > 0

@@ -330,12 +330,13 @@ def test_vsm_batch_matches_sequential(spark, tables):
             assert gs == pytest.approx(es, abs=1e-9), f"qid {qid} doc {gd}"
 
 
-def test_bm25_batch_wand_routing_mixed(spark, tables):
+def test_bm25_batch_wand_routing_mixed(spark, tables, monkeypatch):
     """Per-qid WAND routing inside the batch: with a production-style
     threshold, selective queries take the batched pruned path while
     common-only queries stay on the shared exhaustive scan — and every qid
     remains rank-identical to its sequential bm25_topk ranking."""
-    cfg = CFG.with_(wand_min_postings=50, wand_rare_df_divisor=40)
+    cfg = CFG.with_(wand_min_postings=50)
+    monkeypatch.setattr(q, "WAND_RARE_DF_DIVISOR", 40)
     qs = [
         (0, "web search page"),       # common terms only: rare_cover < k
         (1, "w00483 w00590 w00000"),  # rare (df 1,1) + head: WAND-routed
@@ -451,6 +452,52 @@ def test_bounded_k_in_new_session(spark, tables):
             assert fn(other, tables, query, k=10).collect() == want
     # and back in the first session, whose views are still registered
     assert q.bm25_topk(spark, tables, "page", k=5).collect()
+
+
+def test_refresh_recaches_other_handle_on_same_path(spark, tables):
+    """Two handles on one index path share Spark's cache entries (their
+    plans are identical), so a refresh() of either drops them for both: the
+    other handle's next queries refill its caches and run over cached
+    relations again, with the same results."""
+    from search_engine_trec_fair_ranking_19_spark.operators.index_build import (
+        IndexTables,
+    )
+
+    def run(handle):
+        return (
+            q.bm25_topk(spark, handle, "web search engine", k=10).collect(),
+            q.bm25_topk_wand(spark, handle, "web search engine", k=10).collect(),
+        )
+
+    want = run(tables)
+    other = IndexTables(tables.path, tables.config)
+    assert run(other) == want
+    other.refresh()
+    assert run(tables) == want
+    for df in (tables.postings(spark), tables.decoded_postings(spark)):
+        assert df.storageLevel.useMemory, df.storageLevel
+    assert run(other) == want  # and the refreshed handle refills too
+
+
+def test_vocabulary_fallback_matches_driver_map(spark, tables, monkeypatch):
+    """With the driver vocabulary cap at 0, prepare_query looks the query
+    terms up with a pushed IN filter on the cached vocabulary table instead
+    of the driver map, and bm25/vsm rank bit-identically to the map path."""
+    from search_engine_trec_fair_ranking_19_spark.operators import index_build as ib
+
+    assert tables.vocab_map(spark) is not None
+    monkeypatch.setattr(ib, "VOCAB_DRIVER_CACHE_MAX_TERMS", 0)
+    pushed = ib.IndexTables(tables.path, tables.config)
+    assert pushed.vocab_map(spark) is None
+    for query in QUERIES:
+        assert q.prepare_query(spark, pushed, query, CFG) == q.prepare_query(
+            spark, tables, query, CFG
+        )
+        for fn in (q.bm25_topk, q.vsm_topk):
+            for k in (10, None):
+                want = [(r["docid"], r["score"]) for r in fn(spark, tables, query, k=k).collect()]
+                got = [(r["docid"], r["score"]) for r in fn(spark, pushed, query, k=k).collect()]
+                assert got == want, f"{fn.__name__} k={k} diverged on {query!r}"
 
 
 EXOTIC_QUERIES = [

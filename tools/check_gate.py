@@ -8,9 +8,11 @@ Usage: python tools/check_gate.py [sf_dir] [name ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, ".")
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 
 import duckdb
 
@@ -46,6 +48,10 @@ def canon(rows, cols):
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    # the Python workers import the package too, from any working directory
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        filter(None, (_REPO, os.environ.get("PYTHONPATH")))
+    )
     spark = get_spark(app_name="gate-check", master="local[8]", shuffle_partitions=16)
     con = duckdb.connect()
     for t in TABLES:

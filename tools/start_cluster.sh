@@ -1,13 +1,8 @@
 #!/bin/bash
-# Start a local Spark standalone cluster: 1 master + 4 workers (4 cores / 16g
-# each, tmpfs shuffle dirs). Used by tools/cluster_scaling_bench.py to measure
-# N vs 4N EXECUTOR scaling (1 vs 4 worker JVMs) as the north rule specifies.
-#
-# 4 cores per worker ON PURPOSE: the box's 32 vCPUs are ~16 physical cores x
-# 2 SMT threads (measured, see tools/scaling_bench.py hw_cpu_scaling), so
-# 4 workers x 4c = 16 threads is the largest 4N arm that still adds physical
-# cores rather than hyperthread contention — which is what adding EXECUTORS
-# does on a real cluster.
+# Start a local Spark standalone cluster: 1 master + 4 workers
+# (CORES_PER_WORKER cores / MEM_PER_WORKER each, default 4 / 16g; tmpfs
+# shuffle dirs) at spark://127.0.0.1:7077, for running tools/submit_cli.py
+# under spark-submit.
 set -e
 export SPARK_LOCAL_IP=127.0.0.1
 export SPARK_MASTER_HOST=127.0.0.1

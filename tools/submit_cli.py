@@ -6,8 +6,8 @@ SparkSession (local mode by default). On a cluster the same CLI runs under
 spark-submit, which owns the master, the driver JVM, and ships the package
 to executors via --py-files:
 
-    cd /root/repo && python -c "from tools.cluster_scaling_bench import \
-        _package_zip; print(_package_zip())"        # -> /tmp/engine_pkg.zip
+    # from the repo root
+    python -m zipfile -c /tmp/engine_pkg.zip search_engine_trec_fair_ranking_19_spark
 
     spark-submit \
       --master spark://127.0.0.1:7077 \
