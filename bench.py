@@ -303,13 +303,11 @@ def main() -> None:
         )
         return time.time() - t0
 
-    runner.run("index_build", _build)
+    runner.run("index_build", _build, warmup=True)
     tables = state["tables"]
 
     try:
         # ---- retrieval ----------------------------------------------------
-        # warm-up (JIT/UDF worker spin-up) excluded from per-query numbers
-        q.bm25_topk(spark, tables, "warm up query", k=10)
         from search_engine_trec_fair_ranking_19_spark.config import EngineConfig
 
         # WAND with the PRODUCTION threshold: below the measured crossover
@@ -344,21 +342,16 @@ def main() -> None:
             q.conjunctive(spark, tables, BM25_QUERIES[3]).count()
             out["conjunctive"] = time.time() - t0
             # the whole BM25 query set as ONE plan — compare against
-            # sum(bm25_q*) to read the batch amortization directly; the
-            # production WAND threshold lets the per-qid router decide
-            # (at this SF everything routes to the shared exhaustive scan)
+            # sum(bm25_q*) to read the batch amortization directly
             t0 = time.time()
             q.bm25_topk_batch(
-                spark,
-                tables,
-                list(enumerate(BM25_QUERIES, 1)),
-                k=20,
-                config=wand_cfg,
+                spark, tables, list(enumerate(BM25_QUERIES, 1)), k=20
             ).collect()
             out["bm25_batch_5q"] = time.time() - t0
             return out
 
-        runner.run("retrieval", _retrieval)
+        # warm-up (JIT/UDF worker spin-up) excluded from per-query numbers
+        runner.run("retrieval", _retrieval, warmup=True)
 
         # ---- evaluation loop (the reference's headline workload shape) ----
         judged = {

@@ -34,7 +34,7 @@ GATE_CONFIG = EngineConfig(
     use_stemmer=False,
     use_stopwords=False,
     postings_block_size=256,
-    wand_min_postings=0,  # gate/bench exercise the REAL WAND path
+    wand_min_postings=0,  # bm25_wand_topk runs single-query WAND's pruned path
 )
 
 _INDEX_CACHE: dict[str, IndexTables] = {}
@@ -275,9 +275,9 @@ def q_bm25_oov(spark, sf_dir):
 
 def q_bm25_batch(spark, sf_dir):
     """Batch retrieval: three queries (head / multi-term / OOV-mix) scored in
-    ONE distributed pass — per-qid rank/score-identical to the sequential
-    gates above; the oracle runs the three per-query SQL plans and unions
-    them under their qids."""
+    ONE shared scan of the decoded postings — per-qid rank/score-identical
+    to the sequential gates above; the oracle runs the three per-query SQL
+    plans and unions them under their qids."""
     t = gate_index(spark, sf_dir)
     batch = q.bm25_topk_batch(
         spark,
@@ -322,9 +322,10 @@ def q_existential(spark, sf_dir):
 def q_boolean_and(spark, sf_dir):
     """Boolean AND (conjunctive) retrieval: docs containing EVERY query term
     (the intersection the reference's "Boolean model" never implemented —
-    `Existential.java:14-18` is OR-only). One term-pruned scan + one
-    count-distinct shuffle; the oracle recomputes the intersection with a
-    HAVING over the exploded TF relation."""
+    `Existential.java:14-18` is OR-only). One statement: a term-filtered
+    scan grouped by docid with ``HAVING count(1) = n``; the oracle
+    recomputes the intersection with a HAVING over the exploded TF
+    relation."""
     t = gate_index(spark, sf_dir)
     return q.conjunctive(spark, t, " ".join(_AND_Q)).select("docid", "score")
 

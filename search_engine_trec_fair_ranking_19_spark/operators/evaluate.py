@@ -93,11 +93,6 @@ def evaluate(
     """
     runner: Callable = {"bm25": bm25_topk, "vsm": vsm_topk}[model]
     jmap = _resolve_judged_docids(spark, tables, judgments)
-    order = (F.desc("score"), F.asc("docid"))  # O4 tie order (query._finalize)
-    w_rank = Window.orderBy(*order)
-    w_run = Window.orderBy(*order).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
     rows = []
     for qid, qtext in queries:
         t0 = time.time()
@@ -112,29 +107,7 @@ def evaluate(
             agg = None
             if total_rel > 0 and pairs:
                 pj = local_rows_df(spark, pairs, "docid long, rel int")
-                judged = topk.join(F.broadcast(pj), "docid").select(
-                    "rel",
-                    F.row_number().over(w_rank).alias("judged_rank"),
-                    F.sum(F.when(F.col("rel") == 1, 1).otherwise(0))
-                    .over(w_run)
-                    .alias("rel_so_far"),
-                )
-                agg = judged.agg(
-                    F.sum(
-                        F.when(
-                            F.col("rel") == 1,
-                            F.col("rel_so_far")
-                            / F.col("judged_rank").cast("double"),
-                        )
-                    ).alias("ap_num"),
-                    F.sum(
-                        F.when(
-                            F.col("rel") == 1,
-                            F.log(F.lit(2.0))
-                            / F.log(F.col("judged_rank") + F.lit(1.0)),
-                        )
-                    ).alias("dcg"),
-                ).head()
+                agg = _judged_sums(topk, pj, []).head()
             ap, nd = _ap_ndcg(agg, rel_map, bool(pairs))
         finally:
             topk.unpersist()
@@ -181,6 +154,41 @@ def _per_query_df_and_summary(
         else total_seconds / total_results * results_rate
     )
     return per_query, summary
+
+
+def _judged_sums(
+    ranked: DataFrame, judged_pairs: DataFrame, keys: list[str]
+) -> DataFrame:
+    """Per ``keys`` group (``[]``: one query; ``["qid"]``: a batch), the
+    (ap_num, dcg) sums over the judged rows of a ranked (keys..., docid,
+    score) frame, ranks counted among judged rows only
+    (`ThemisEval.java:220-280`). ``judged_pairs`` is the driver-sized
+    (keys..., docid, rel) frame, broadcast."""
+    order = (F.desc("score"), F.asc("docid"))  # O4 tie order (query._finalize)
+    w_rank = Window.partitionBy(*keys).orderBy(*order)
+    w_run = w_rank.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    judged = ranked.join(F.broadcast(judged_pairs), [*keys, "docid"]).select(
+        *keys,
+        "rel",
+        F.row_number().over(w_rank).alias("judged_rank"),
+        F.sum(F.when(F.col("rel") == 1, 1).otherwise(0))
+        .over(w_run)
+        .alias("rel_so_far"),
+    )
+    return judged.groupBy(*keys).agg(
+        F.sum(
+            F.when(
+                F.col("rel") == 1,
+                F.col("rel_so_far") / F.col("judged_rank").cast("double"),
+            )
+        ).alias("ap_num"),
+        F.sum(
+            F.when(
+                F.col("rel") == 1,
+                F.log(F.lit(2.0)) / F.log(F.col("judged_rank") + F.lit(1.0)),
+            )
+        ).alias("dcg"),
+    )
 
 
 def _ap_ndcg(
@@ -242,33 +250,7 @@ def evaluate_batch(
             pj = local_rows_df(
                 spark, pair_rows, "qid int, docid long, rel int"
             )
-            order = (F.desc("score"), F.asc("docid"))
-            w_rank = Window.partitionBy("qid").orderBy(*order)
-            w_run = w_rank.rowsBetween(
-                Window.unboundedPreceding, Window.currentRow
-            )
-            judged = ranked.join(F.broadcast(pj), ["qid", "docid"]).select(
-                "qid",
-                "rel",
-                F.row_number().over(w_rank).alias("judged_rank"),
-                F.sum(F.when(F.col("rel") == 1, 1).otherwise(0))
-                .over(w_run)
-                .alias("rel_so_far"),
-            )
-            for r in judged.groupBy("qid").agg(
-                F.sum(
-                    F.when(
-                        F.col("rel") == 1,
-                        F.col("rel_so_far") / F.col("judged_rank").cast("double"),
-                    )
-                ).alias("ap_num"),
-                F.sum(
-                    F.when(
-                        F.col("rel") == 1,
-                        F.log(F.lit(2.0)) / F.log(F.col("judged_rank") + F.lit(1.0)),
-                    )
-                ).alias("dcg"),
-            ).collect():
+            for r in _judged_sums(ranked, pj, ["qid"]).collect():
                 agg_map[int(r["qid"])] = r
     finally:
         ranked.unpersist()

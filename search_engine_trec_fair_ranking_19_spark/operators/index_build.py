@@ -185,11 +185,10 @@ class IndexTables:
 
     Postings are cached twice, each filled on first use:
 
-    * ``postings``: the compressed blocks, which block-max WAND and the
-      block-pruned AND read, because they prune on block metadata before
-      any decode;
-    * ``decoded_postings``: one row per posting, ``(block_id, term, docid,
-      tf, dl)``, decoded once per handle by one ``mapInArrow`` pass. Every
+    * ``postings``: the compressed blocks, which block-max WAND reads,
+      because it prunes on block metadata before any decode;
+    * ``decoded_postings``: one row per posting, ``(term, docid, tf,
+      dl)``, decoded once per handle by one ``mapInArrow`` pass. Every
       other query path filters it with ``term IN (...)``, so a query runs
       no Python and scores in whole-stage codegen. Only cached while a
       bound on its size fits (:meth:`_decoded_fits`); above it, queries
@@ -244,10 +243,7 @@ class IndexTables:
             if name != "decoded_postings":
                 df = _right_size_for_cache(self._read(spark, name))
             elif self._decoded_fits(spark):
-                df = decode_blocks(
-                    _right_size_for_cache(self._read(spark, "postings")),
-                    keep=("block_id",),
-                )
+                df = decode_blocks(_right_size_for_cache(self._read(spark, "postings")))
             else:
                 df = None
             if df is not None:
@@ -290,7 +286,7 @@ class IndexTables:
         return self._cached(spark, "postings")
 
     def decoded_postings(self, spark) -> DataFrame | None:
-        """(block_id, term, docid, tf, dl), one row per posting; None when
+        """(term, docid, tf, dl), one row per posting; None when
         the size gate is closed (:meth:`_decoded_fits`)."""
         return self._cached(spark, "decoded_postings")
 
@@ -671,9 +667,9 @@ def decode_blocks(blocks: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
     ``(*keep, term, docid, tf, dl)`` — the inverse of
     :func:`build_postings_blocks`' encode, as one ``mapInArrow``.
 
-    ``keep`` carries extra block-level columns (e.g. ``block_id`` for the
-    batched WAND's per-(qid, block) survivor semi-join) to every posting of
-    the block. Per Arrow batch, the three binary columns' offsets and data
+    ``keep`` carries extra block-level columns (e.g. the vocabulary's
+    ``term_df`` in :func:`doc_stats_from_postings`) to every posting of the
+    block. Per Arrow batch, the three binary columns' offsets and data
     buffers go to ONE :func:`decode_blocks_concat` pass as they are (no
     per-block Python object), and ``term`` / ``keep`` are expanded with an
     Arrow ``take`` over each block's row index repeated by its posting

@@ -11,9 +11,8 @@ posting relation (term, docid, tf, dl),
     handle by one mapInArrow pass; MEMORY_ONLY, term-sorted, size-gated —
     `IndexTables`), so the IN filter prunes in-memory batches on the term
     stats and a query runs no Python. Over the size gate, and for block-max
-    WAND's seed/survivors and the block-pruned AND, the query's own decoded
-    frame is registered as a temp view instead and the same statement runs
-    over it.
+    WAND's seed/survivors, the query's own decoded frame is registered as a
+    temp view instead and the same statement runs over it.
   * query terms are bound as named parameter markers and never formatted
     into the text, so no term needs escaping; per-term weights/idfs are
     ``map(:t0, w0, ...)[term]`` lookups with bit-exact ``repr`` double
@@ -33,6 +32,10 @@ Each scoring formula is written once, as a SQL fragment
 inline it over per-term lookups, block-max WAND's block bound applies it
 to (max_tf, min_dl), and the batch operators apply it with ``F.expr`` over
 their broadcast query frame's columns.
+
+The batch operators and the Boolean AND have one plan each, over the same
+posting relation: a batch is one shared scan of the union of its terms,
+scored per (qid, docid); the AND is the ``HAVING count(1) = n`` statement.
 
 BM25+ (`OkapiBM25P.java:36-106`): every doc matching ≥1 term gets the constant
 Σ_j idf_j (the δ=1 term for ALL query terms), plus idf_j·f_j(k1+1)/(f_j+B) for
@@ -122,9 +125,7 @@ def matched_postings(
     decoded = tables.decoded_postings(spark)
     if decoded is None:
         return decode_blocks(tables.postings(spark).filter(F.col("term").isin(terms)))
-    return decoded.filter(F.col("term").isin(terms)).select(
-        "term", "docid", "tf", "dl"
-    )
+    return decoded.filter(F.col("term").isin(terms))
 
 
 # ---------------------------------------------------------------------------
@@ -420,12 +421,12 @@ WAND_RARE_DF_DIVISOR = 1000
 
 
 def _wand_pays(pq: PreparedQuery, k: int, config: EngineConfig) -> bool:
-    """Block-max WAND routing, one predicate for the single and the batch
-    operator (measured, BENCH/wand_crossover.json): pruning pays only when
-    BOTH the decode volume clears the crossover AND the query is selective
-    — its rare terms (df ≤ N/divisor) must cover ≥ k docs so θ can rise
-    above common-only blocks' UB. ``wand_min_postings == 0`` always runs
-    WAND (tests, gate). Pure driver arithmetic on pq.dfs."""
+    """Routing of :func:`bm25_topk_wand` (measured,
+    BENCH/wand_crossover.json): pruning pays only when BOTH the decode
+    volume clears the crossover AND the query is selective — its rare terms
+    (df ≤ N/divisor) must cover ≥ k docs so θ can rise above common-only
+    blocks' UB. ``wand_min_postings == 0`` always runs WAND (tests, gate).
+    Pure driver arithmetic on pq.dfs."""
     if config.wand_min_postings == 0:
         return True
     rare_df_max = max(1, pq.n_docs // WAND_RARE_DF_DIVISOR)
@@ -450,7 +451,6 @@ def bm25_topk_batch(
     pagerank_weight: float | None = None,
     config: EngineConfig | None = None,
     expander=None,
-    stats: dict | None = None,
 ) -> DataFrame:
     """N queries → ONE distributed pass: (qid, docid, score), rank-identical
     per qid to :func:`bm25_topk` run query-by-query.
@@ -461,7 +461,8 @@ def bm25_topk_batch(
     amortizes the whole batch over a single plan:
 
       * one postings scan pruned to the UNION of all query terms (the
-        pushed-IN filter covers the batch, so shared head terms decode once);
+        pushed-IN filter covers the batch, so shared head terms are read
+        once), whatever each query's selectivity;
       * per-query weights/idfs ride a broadcast (qid, term, weight, idf)
         frame — at batch size a real broadcast join beats N literal-map
         plans, inverting the single-query design choice (`_per_term`);
@@ -477,15 +478,6 @@ def bm25_topk_batch(
     PageRank by each query's own result-set maximum, exactly like
     `_finalize`. Output is not globally sorted; sort or window per qid at
     the call site if presentation order matters.
-
-    **WAND routing.** Each qid is routed by the same driver arithmetic as
-    :func:`bm25_topk_wand` (Σ DF ≥ ``wand_min_postings`` AND rare-term
-    coverage ≥ k; only with bounded ``k`` and no PageRank blend — pruning is
-    unsound otherwise). Qualifying qids share ONE batched block-max WAND
-    pass (:func:`_bm25_batch_raw_wand`: one metadata aggregation, one seed
-    decode, one survivor decode — each block decoded at most once for the
-    whole sub-batch); the rest share the exhaustive scan. Results are
-    rank-identical either way; ``stats['paths']`` records the per-qid route.
     """
     config = config or tables.config
     if pagerank_weight is None:
@@ -493,27 +485,7 @@ def bm25_topk_batch(
     pqs = _prepare_batch(spark, tables, queries, config, expander)
     if not pqs:
         return _local_df(spark, [], BATCH_TOPK_SCHEMA)
-
-    wand_pqs: dict[int, PreparedQuery] = {}
-    exh_pqs: dict[int, PreparedQuery] = dict(pqs)
-    if k is not None and pagerank_weight == 0.0:
-        for qid, pq in pqs.items():
-            if _wand_pays(pq, k, config):
-                wand_pqs[qid] = exh_pqs.pop(qid)
-    if stats is not None:
-        stats["paths"] = {
-            qid: ("wand" if qid in wand_pqs else "exhaustive")
-            for qid in pqs
-        }
-
-    parts = []
-    if exh_pqs:
-        parts.append(_bm25_batch_raw_exhaustive(spark, tables, exh_pqs, config))
-    if wand_pqs:
-        parts.append(
-            _bm25_batch_raw_wand(spark, tables, wand_pqs, k, config, stats)
-        )
-    raw = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+    raw = _bm25_batch_raw_exhaustive(spark, tables, pqs, config)
     return _finalize_batch(spark, tables, raw, k, pagerank_weight)
 
 
@@ -533,12 +505,20 @@ def _prepare_batch(
     return pqs
 
 
-def _batch_query_frames(
-    spark: SparkSession, pqs: dict[int, PreparedQuery]
-) -> tuple[DataFrame, DataFrame]:
-    """Driver-sized (qid, term, weight, idf) and (qid, sum_idf) frames —
-    the batch equivalents of the single-query literal maps, attached as
-    broadcast joins (at batch size a real broadcast beats N literal plans)."""
+def _bm25_batch_raw_exhaustive(
+    spark: SparkSession,
+    tables: IndexTables,
+    pqs: dict[int, PreparedQuery],
+    config: EngineConfig,
+) -> DataFrame:
+    """Shared-scan exhaustive batch scoring → (qid, docid, raw): the union
+    of the batch's terms is scanned once, and each posting fans out JVM-side
+    to the qids holding its term. Per-query weights/idfs and Σidf ride
+    driver-sized frames, the batch equivalents of the single-query literal
+    maps, attached as broadcast joins (at batch size a real broadcast beats
+    N literal plans)."""
+    union_terms = sorted({t for pq in pqs.values() for t, _ in pq.terms})
+    posting = matched_postings(spark, tables, union_terms)
     qt = _local_df(
         spark,
         [
@@ -553,192 +533,16 @@ def _batch_query_frames(
         [(qid, float(sum(pq.idfs))) for qid, pq in pqs.items()],
         "qid int, sum_idf double",
     )
-    return qt, qsum
-
-
-def _bm25_batch_raw_exhaustive(
-    spark: SparkSession,
-    tables: IndexTables,
-    pqs: dict[int, PreparedQuery],
-    config: EngineConfig,
-) -> DataFrame:
-    """Shared-scan exhaustive batch scoring → (qid, docid, raw)."""
-    union_terms = sorted({t for pq in pqs.values() for t, _ in pq.terms})
-    posting = matched_postings(spark, tables, union_terms)
-    qt, qsum = _batch_query_frames(spark, pqs)
     avgdl = next(iter(pqs.values())).avgdl
-    return _batch_score(posting, qt, qsum, config, avgdl)
-
-
-def _batch_score(
-    decoded: DataFrame,  # (term, docid, tf, dl[, block_id])
-    qt: DataFrame,
-    qsum: DataFrame,
-    config: EngineConfig,
-    avgdl: float,
-    pairs: DataFrame | None = None,  # (qid, block_id): blocks admitted per qid
-) -> DataFrame:
-    """Score decoded postings per (qid, docid) → (qid, docid, raw). With
-    ``pairs``, each qid counts only its admitted blocks: the decode
-    upstream is SHARED across qids — a block decodes once however many
-    queries admit it; the per-qid fan-out happens JVM-side on the
-    already-decoded rows."""
-    scored = decoded.join(F.broadcast(qt), "term")
-    if pairs is not None:
-        scored = scored.join(F.broadcast(pairs), ["qid", "block_id"], "left_semi")
     contrib = _bm25_contrib("tf", "dl", "weight", "idf", config, avgdl)
     return (
-        scored.withColumn("contrib", F.expr(contrib))
+        posting.join(F.broadcast(qt), "term")
+        .withColumn("contrib", F.expr(contrib))
         .groupBy("qid", "docid")
         .agg(F.sum("contrib").alias("contrib"))
         .join(F.broadcast(qsum), "qid")
         .select("qid", "docid", (F.col("contrib") + F.col("sum_idf")).alias("raw"))
     )
-
-
-def _bm25_batch_raw_wand(
-    spark: SparkSession,
-    tables: IndexTables,
-    pqs: dict[int, PreparedQuery],
-    k: int,
-    config: EngineConfig,
-    stats: dict | None = None,
-) -> DataFrame:
-    """Batched block-max WAND → (qid, docid, raw), rank-identical per qid to
-    :func:`bm25_topk_wand`.
-
-    Same three phases as the single-query operator, amortized over the
-    sub-batch with two driver actions total (vs 2-3 PER query sequentially):
-
-      1. metadata pass: per-(qid, block) upper bounds from max_tf/min_dl —
-         one aggregation over blocks ⋈ broadcast query frame;
-      2. seed: per-qid top groups by UB (window rank, bounded collect),
-         cumulative-cover floors identical to the single-query seed; the
-         UNION of seed blocks decodes once, θ_qid = k-th seed raw score
-         (one collect for every qid's θ);
-      3. prune + exact: groups with UB ≥ θ_qid survive per qid (qids whose
-         seed couldn't fill k keep everything — no safe pruning); the union
-         of surviving blocks decodes once, scores fan out per qid via the
-         (qid, block_id) semi-join.
-
-    Soundness per qid is the single-query argument verbatim: any pruned doc
-    scores ≤ UB(group) < θ_qid ≤ true k-th score, and the argmax doc always
-    survives, so max-normalization in `_finalize_batch` sees the true max."""
-    union_terms = sorted({t for pq in pqs.values() for t, _ in pq.terms})
-    blocks = (
-        tables.postings(spark).filter(F.col("term").isin(union_terms)).persist()
-    )
-    qt, qsum = _batch_query_frames(spark, pqs)
-    avgdl = next(iter(pqs.values())).avgdl
-    group_ub = None
-    try:
-        # --- 1. per-(qid, block) upper bounds (JVM-only column math) ------
-        ub = _bm25_block_bound("weight", "idf", config, avgdl)
-        group_ub = (
-            blocks.join(F.broadcast(qt), "term")
-            .withColumn("ub", F.expr(ub))
-            .groupBy("qid", "block_id")
-            .agg(F.sum("ub").alias("ub_sum"), F.max("df").alias("min_docs"))
-            .join(F.broadcast(qsum), "qid")
-            .select(
-                "qid",
-                "block_id",
-                (F.col("ub_sum") + F.col("sum_idf")).alias("group_ub"),
-                "min_docs",
-            )
-            .persist()
-        )
-
-        # --- 2. seed: per-qid UB-ranked prefix, same floors as single ----
-        lim = max(4 * k, 64)
-        rn = F.row_number().over(
-            Window.partitionBy("qid").orderBy(
-                F.desc("group_ub"), F.asc("block_id")
-            )
-        )
-        seed_rows = (
-            group_ub.withColumn("rn", rn)
-            .filter(F.col("rn") <= lim)  # bounded driver transfer: Nq·lim
-            .select("qid", "block_id", "min_docs", "rn")
-            .collect()
-        )
-        per_qid: dict[int, list] = {}
-        for r in sorted(seed_rows, key=lambda r: (r["qid"], r["rn"])):
-            per_qid.setdefault(r["qid"], []).append(r)
-        seed_pairs: list[tuple[int, int]] = []
-        for qid, rows in per_qid.items():
-            min_groups = min(k, len(rows))
-            covered = taken = 0
-            for r in rows:
-                seed_pairs.append((qid, r["block_id"]))
-                covered += r["min_docs"]
-                taken += 1
-                if covered >= 4 * k and taken >= min_groups:
-                    break
-        seed_pair_df = _local_df(
-            spark, seed_pairs, "qid int, block_id long"
-        )
-        seed_ids = sorted({bid for _, bid in seed_pairs})
-        dec_seed = decode_blocks(
-            blocks.filter(F.col("block_id").isin(seed_ids)),
-            keep=("block_id",),
-        )
-        raw_seed = _batch_score(dec_seed, qt, qsum, config, avgdl, seed_pair_df)
-        kth_rows = (
-            raw_seed.withColumn(
-                "rn",
-                F.row_number().over(
-                    Window.partitionBy("qid").orderBy(
-                        F.desc("raw"), F.asc("docid")
-                    )
-                ),
-            )
-            .filter(F.col("rn") <= k)
-            .groupBy("qid")
-            .agg(
-                F.min("raw").alias("theta"),
-                F.count(F.lit(1)).alias("n_seed"),
-            )
-            .collect()
-        )
-        # qids whose seed filled k get a θ; everyone else keeps all blocks
-        thetas = {
-            r["qid"]: float(r["theta"])
-            for r in kth_rows
-            if r["n_seed"] >= k and r["theta"] is not None
-        }
-        # --- 3. prune + exact: shared decode of the survivor union -------
-        theta_df = _local_df(
-            spark,
-            [(qid, t) for qid, t in thetas.items()],
-            "qid int, theta double",
-        )
-        surv = (
-            group_ub.join(F.broadcast(theta_df), "qid", "left")
-            .filter(
-                F.col("theta").isNull()
-                | (F.col("group_ub") >= F.col("theta"))
-            )
-            .select("qid", "block_id")
-        )
-        if stats is not None:
-            stats["batch_theta"] = thetas
-            stats["batch_seed_groups"] = len(seed_pairs)
-            stats["batch_pairs_total"] = group_ub.count()
-            stats["batch_pairs_survived"] = surv.count()
-        dec = decode_blocks(
-            blocks.join(
-                F.broadcast(surv.select("block_id").distinct()),
-                "block_id",
-                "left_semi",
-            ),
-            keep=("block_id",),
-        )
-        return _batch_score(dec, qt, qsum, config, avgdl, surv)
-    finally:
-        blocks.unpersist()
-        if group_ub is not None:
-            group_ub.unpersist()
 
 
 def _finalize_batch(
@@ -989,27 +793,12 @@ def existential(
     )
 
 
-# rarest-term DF bound for conjunctive block pruning: a term occupies at
-# most DF blocks, so this also caps the pushed IN-list size. Above it the
-# metadata collect grows while the decode saving shrinks (the rarest term
-# is no longer selective) — the same reasoning as WAND's routing floor.
-CONJ_PRUNE_MAX_BLOCKS = 4096
-
-# minimum decode volume the pruning must stand to save (≈ Σ DF − DF_min,
-# the other terms' postings) before the metadata job pays. Set just under
-# the smallest measured win, WAND-convention (BENCH/conjunctive_prune.json,
-# 2M-doc hapax corpus: saved ≈ 1.65M postings won 1.8x; an all-rare AND
-# with saved ≈ 2 LOST 0.2s — the collect job — to the exhaustive plan).
-CONJ_PRUNE_MIN_SAVED_DF = 1_500_000
-
-
 def conjunctive(
     spark: SparkSession,
     tables: IndexTables,
     query: str,
     k: int | None = None,
     config: EngineConfig | None = None,
-    stats: dict | None = None,
 ) -> DataFrame:
     """Boolean AND — docs containing EVERY distinct query term, score ≡ 1.0.
 
@@ -1023,71 +812,14 @@ def conjunctive(
     naive alternative (a k-way chain of per-term semi-joins) is k shuffles
     of the same postings; the most selective term bounds the output exactly
     as in the reference's heap-merge engines.
-
-    Block-intersection pruning (the AND twin of WAND): ``block_id =
-    docid // block_size`` is a GLOBAL docid bucketing, so a doc can
-    satisfy the AND only in blocks where EVERY term has a postings row —
-    a subset of the RAREST term's block list. When the rarest DF is
-    bounded (≤ ``CONJ_PRUNE_MAX_BLOCKS``, which also bounds the list: a
-    term has at most DF blocks), one tiny metadata job collects that
-    term's block ids and pushes ``block_id IN (...)`` into the scan, so
-    head terms decode only candidate blocks instead of their full
-    posting lists — at web scale the decode volume drops from Σ DF to
-    ~n·DF_min. Selectivity-gated like WAND's router, from measurement
-    (`BENCH/conjunctive_prune.json`): the rarest DF must be bounded (an
-    all-head AND gains nothing and skips the metadata job) AND the
-    decode volume stood to be saved (Σ DF − DF_min) must clear the
-    measured floor (an all-rare AND decodes almost nothing either way
-    and loses the metadata job's latency). ``stats['conjunctive']``
-    reports which path ran.
     """
     config = config or tables.config
     pq = prepare_query(spark, tables, query, config)
-    terms = sorted({t for t, _ in pq.terms})
-    if not terms or any(df == 0 for df in pq.dfs):
-        if stats is not None:
-            stats["conjunctive"] = "empty"
+    if not pq.terms or any(df == 0 for df in pq.dfs):
         return _local_df(spark, [], TOPK_SCHEMA)
-    df_by_term = dict(zip((t for t, _ in pq.terms), pq.dfs))
-    min_df = min(df_by_term[t] for t in terms)
-    saved_df = sum(df_by_term[t] for t in terms) - min_df
-    blk: list | None = None
-    if (
-        len(terms) > 1
-        and min_df <= CONJ_PRUNE_MAX_BLOCKS
-        and saved_df >= CONJ_PRUNE_MIN_SAVED_DF
-    ):
-        rarest = min(terms, key=lambda t: (df_by_term[t], t))
-        blk = [
-            r["block_id"]
-            for r in tables.postings(spark)
-            .filter(F.col("term") == rarest)
-            .select("block_id")
-            .collect()
-        ]
-        # post-collect fallback: at small corpora (or for a rare-but-
-        # spread term) the candidate list can cover most of the docid
-        # space — the IN filter then prunes nothing and only bloats the
-        # predicate. DF bounds block count, so this is knowable only
-        # after the (tiny) metadata job; its cost is all we wasted.
-        total_blocks = -(-pq.n_docs // config.postings_block_size)
-        if len(blk) * 2 > total_blocks:
-            blk = None
-    frame = None
-    if blk is not None:
-        frame = decode_blocks(
-            tables.postings(spark).filter(
-                F.col("term").isin(terms) & F.col("block_id").isin(blk)
-            )
-        )
-        if stats is not None:
-            stats["conjunctive"] = "block_pruned"
-            stats["n_candidate_blocks"] = len(blk)
-    elif stats is not None:
-        stats["conjunctive"] = "exhaustive"
     return _rank(
         spark, tables, pq, lambda v: _set_sql(v, pq, every_term=True), k,
-        frame=frame, const_one=True,
+        const_one=True,
     )
 
 

@@ -272,70 +272,6 @@ def test_lm_score_is_joins_plus_agg_no_window(spark):
     assert plan.count("BroadcastHashJoin") == 3, plan
 
 
-def test_conjunctive_block_pruning_parity(spark, tmp_path):
-    """Block-intersection pruning must be invisible in the result: the
-    pruned path (scan restricted to the rarest term's block ids) returns
-    exactly the exhaustive path's rows, and the router reports which path
-    ran. Corpus built so the route provably engages: one doc carries a
-    hapax term (1 block out of ~13), every doc carries the head terms."""
-    import search_engine_trec_fair_ranking_19_spark.operators.query as qq
-    from search_engine_trec_fair_ranking_19_spark.entry_queries import (
-        documents_as_webtext,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (i, "web search " + ("zqvxterm " if i == 50 else "") + f"filler{i}")
-            for i in range(100)
-        ],
-        "doc_id long, text string",
-    )
-    t2 = build_index(
-        spark,
-        documents_as_webtext(docs),
-        str(tmp_path / "conj_idx"),
-        EngineConfig(postings_block_size=8),
-    )
-    # the production saved-DF floor is measured at web scale; at this
-    # corpus nothing clears it, so lower it to exercise the pruned path
-    old_floor = qq.CONJ_PRUNE_MIN_SAVED_DF
-    old_max = qq.CONJ_PRUNE_MAX_BLOCKS
-    try:
-        qq.CONJ_PRUNE_MIN_SAVED_DF = 0
-        stats = {}
-        pruned = qq.conjunctive(
-            spark, t2, "zqvxterm web", k=None, stats=stats
-        )
-        assert stats["conjunctive"] == "block_pruned"
-        assert stats["n_candidate_blocks"] == 1
-        rows_pruned = [(r["docid"], r["score"]) for r in pruned.collect()]
-        qq.CONJ_PRUNE_MAX_BLOCKS = -1  # force the exhaustive path
-        stats2 = {}
-        exhaustive = qq.conjunctive(
-            spark, t2, "zqvxterm web", k=None, stats=stats2
-        )
-        assert stats2["conjunctive"] == "exhaustive"
-        rows_exhaustive = [
-            (r["docid"], r["score"]) for r in exhaustive.collect()
-        ]
-        assert rows_pruned and rows_pruned == rows_exhaustive
-        qq.CONJ_PRUNE_MAX_BLOCKS = old_max
-        # all-head AND on the same index: the rarest term covers every
-        # block, so the post-collect coverage fallback routes exhaustive
-        # even with the floor lowered
-        stats3 = {}
-        qq.conjunctive(spark, t2, "web search", k=None, stats=stats3)
-        assert stats3["conjunctive"] == "exhaustive"
-    finally:
-        qq.CONJ_PRUNE_MIN_SAVED_DF = old_floor
-        qq.CONJ_PRUNE_MAX_BLOCKS = old_max
-    # production floor: a selective-but-tiny AND (nothing saved) must not
-    # pay the metadata job
-    stats4 = {}
-    qq.conjunctive(spark, t2, "zqvxterm web", k=None, stats=stats4)
-    assert stats4["conjunctive"] == "exhaustive"
-
-
 def test_duplicate_spans_skew_proof_plan(spark):
     """Substring-span dedup plan after the round-5 skew-proofing: per-whash
     occurrence stats come from groupBy + join-back (map-side partial agg
