@@ -304,7 +304,13 @@ def test_bm25_batch_matches_sequential(spark, tables):
     )
     # stopword-only query contributes no rows at all
     assert 3 not in batch
-    # common terms only, rare (df 1, 1) + head, and one head term at k=2
+
+
+def test_bm25_batch_wand_routing_mixed(spark, tables):
+    """A batch mixing query shapes that would route differently under a
+    production-style WAND threshold (common terms only, rare + head, one
+    head term) at small k: the batch runs one shared plan for all of them
+    and every qid stays rank-identical to its sequential bm25_topk."""
     _assert_batch_matches_sequential(
         spark,
         tables,
