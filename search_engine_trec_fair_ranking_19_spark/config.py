@@ -46,7 +46,8 @@ class EngineConfig:
     # common-only blocks' UB — 48 of 1479 block groups survive, 1.3-1.5× net
     # wall-clock win). The default sits just under that smallest measured
     # winning Σ DF. The second routing condition, selectivity, is
-    # ``query.WAND_RARE_DF_DIVISOR``.
+    # ``query.WAND_RARE_DF_DIVISOR``. While the decoded-postings cache is
+    # open, any nonzero value routes to the cached plan.
     wand_min_postings: int = 3_000_000
 
     def with_(self, **kw) -> "EngineConfig":

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_rows_df
 from .dedup import _hashed_shingles
 
 # contaminated doc ids collected to the driver for the broadcast anti-join
@@ -132,7 +133,7 @@ def decontaminate(
     ids.unpersist()
     spark = train_df.sparkSession
     id_type = train_df.schema[id_col].dataType.simpleString()
-    cid = spark.createDataFrame([(r["__cid"],) for r in head], f"__cid {id_type}")
+    cid = local_rows_df(spark, [(r["__cid"],) for r in head], f"__cid {id_type}")
     return train_df.join(
         F.broadcast(cid), F.col(id_col) == F.col("__cid"), "left_anti"
     )

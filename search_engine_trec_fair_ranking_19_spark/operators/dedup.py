@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text_analysis import fingerprint
+from ..session import local_rows_df
 
 _MERSENNE = (1 << 61) - 1
 
@@ -727,8 +728,8 @@ def connected_components(
         if len(head) <= driver_budget_edges:
             spark = pairs.sparkSession
             mapping = _driver_components([(r["u"], r["v"]) for r in head])
-            comp = spark.createDataFrame(
-                list(mapping.items()) or [], "node long, component long"
+            comp = local_rows_df(
+                spark, list(mapping.items()), "node long, component long"
             )
             if nodes is None:
                 return comp

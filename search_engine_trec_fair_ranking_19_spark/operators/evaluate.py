@@ -2,13 +2,14 @@
 
 Loops queries on the driver (reference: 635 queries) against the loaded index
 and computes AP / nDCG per query with the reference's judged-only semantics —
-DISTRIBUTED: the full ranking is never collected. Per query, the (tiny)
-judged-docid set is broadcast-joined onto the ranked frame, judged ranks come
-from a window over the judged rows only (≤ |judgments| rows, so the
-single-partition window is trivially safe), and only two scalars (AP
-numerator, DCG) plus the result count ever reach the driver. At 47M docs ×
-k=∞ (`ThemisEval.java:136` ranks the whole collection) a per-query
-full-ranking collect is a driver OOM; this shape is O(|judged|) driver-side.
+DISTRIBUTED: the full ranking is never collected. The (tiny) judged
+(docid, rel) pairs are broadcast and LEFT-joined onto the ranked frame, and
+ONE aggregation per call returns, per query, the result count and the
+(score, docid, rel) rows of the judged hits (≤ |judgments| rows). AP and
+nDCG are then the reference's sequential loop over those rows on the driver
+(:func:`_ap_ndcg`). At 47M docs × k=∞ (`ThemisEval.java:136` ranks the whole
+collection) a per-query full-ranking collect is a driver OOM; this shape is
+O(|judged|) driver-side, and the judgments are on the driver already.
 
 Emits the same summary shape (avg/min/max AP, nDCG, timing) as the
 reference's ``evaluation_*.txt`` files, as a small DataFrame + dict.
@@ -20,7 +21,7 @@ import math
 import time
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import local_rows_df
@@ -96,23 +97,12 @@ def evaluate(
     rows = []
     for qid, qtext in queries:
         t0 = time.time()
-        topk = runner(
-            spark, tables, qtext, k=k, pagerank_weight=pagerank_weight
-        ).persist()
-        try:
-            n_results = topk.count()
-            rel_map = judgments.get(qid, {})
-            total_rel = sum(1 for v in rel_map.values() if v == 1)
-            pairs = jmap.get(qid, [])
-            agg = None
-            if total_rel > 0 and pairs:
-                pj = local_rows_df(spark, pairs, "docid long, rel int")
-                agg = _judged_sums(topk, pj, []).head()
-            ap, nd = _ap_ndcg(agg, rel_map, bool(pairs))
-        finally:
-            topk.unpersist()
+        topk = runner(spark, tables, qtext, k=k, pagerank_weight=pagerank_weight)
+        pj = local_rows_df(spark, jmap.get(qid, []), "docid long, rel int")
+        (r,) = _counts_and_judged(topk, pj, [])
+        ap, nd = _ap_ndcg(r["judged"], judgments.get(qid, {}))
         dt = time.time() - t0
-        rows.append((qid, qtext, float(ap), float(nd), n_results, dt))
+        rows.append((qid, qtext, ap, nd, int(r["n"]), dt))
     return _per_query_df_and_summary(spark, rows)
 
 
@@ -156,57 +146,51 @@ def _per_query_df_and_summary(
     return per_query, summary
 
 
-def _judged_sums(
+def _counts_and_judged(
     ranked: DataFrame, judged_pairs: DataFrame, keys: list[str]
-) -> DataFrame:
-    """Per ``keys`` group (``[]``: one query; ``["qid"]``: a batch), the
-    (ap_num, dcg) sums over the judged rows of a ranked (keys..., docid,
-    score) frame, ranks counted among judged rows only
-    (`ThemisEval.java:220-280`). ``judged_pairs`` is the driver-sized
-    (keys..., docid, rel) frame, broadcast."""
-    order = (F.desc("score"), F.asc("docid"))  # O4 tie order (query._finalize)
-    w_rank = Window.partitionBy(*keys).orderBy(*order)
-    w_run = w_rank.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    judged = ranked.join(F.broadcast(judged_pairs), [*keys, "docid"]).select(
-        *keys,
-        "rel",
-        F.row_number().over(w_rank).alias("judged_rank"),
-        F.sum(F.when(F.col("rel") == 1, 1).otherwise(0))
-        .over(w_run)
-        .alias("rel_so_far"),
+) -> list:
+    """Per ``keys`` group (``[]``: one query; ``["qid"]``: a batch) of a
+    ranked (keys..., docid, score) frame, ONE collect of the result count
+    ``n`` and the ``judged`` list of (score, docid, rel) structs of its rows
+    that are judged. ``judged_pairs`` is the driver-sized (keys..., docid,
+    rel) frame, broadcast and LEFT-joined: a (qid, url) judgment is unique
+    and so is a url's docid, so the join adds no rows. Groups with no
+    ranked rows are absent (``[]``: one row with ``n`` 0)."""
+    judged = F.when(
+        F.col("rel").isNotNull(), F.struct("score", "docid", "rel")
     )
-    return judged.groupBy(*keys).agg(
-        F.sum(
-            F.when(
-                F.col("rel") == 1,
-                F.col("rel_so_far") / F.col("judged_rank").cast("double"),
-            )
-        ).alias("ap_num"),
-        F.sum(
-            F.when(
-                F.col("rel") == 1,
-                F.log(F.lit(2.0)) / F.log(F.col("judged_rank") + F.lit(1.0)),
-            )
-        ).alias("dcg"),
+    return (
+        ranked.join(F.broadcast(judged_pairs), [*keys, "docid"], "left")
+        .groupBy(*keys)
+        .agg(
+            F.count("*").alias("n"),
+            F.collect_list(judged).alias("judged"),  # skips the nulls
+        )
+        .collect()
     )
 
 
-def _ap_ndcg(
-    agg_row, rel_map: dict, has_pairs: bool
-) -> tuple[float, float]:
-    """Driver-side AP/nDCG from the distributed (ap_num, dcg) scalars —
-    shared by the sequential and batch paths (`ThemisEval.java:220-280`)."""
+def _ap_ndcg(judged: list, rel_map: dict[str, int]) -> tuple[float, float]:
+    """AP and nDCG of one query from its judged (score, docid, rel) hits —
+    the reference's sequential loop (`ThemisEval.java:220-280`) over them in
+    rank order (score desc, docid asc: the O4 tie order of
+    ``query._finalize``), ranks counted among judged rows only. Written
+    term for term as ``oracle.engine.average_precision``/``ndcg``, so the
+    values are bit-identical to the oracle's on the same ranking. NaN for
+    both when the query has no relevant judgment; judged urls absent from
+    the collection count only in the denominators."""
     total_rel = sum(1 for v in rel_map.values() if v == 1)
     if total_rel == 0:
         return float("nan"), float("nan")
-    if not has_pairs or agg_row is None:
-        return 0.0, 0.0
-    ap = float(agg_row["ap_num"] or 0.0) / total_rel
-    idcg = sum(
-        math.log(2) / math.log(i + 1) for i in range(1, total_rel + 1)
-    )
-    nd = float(agg_row["dcg"] or 0.0) / idcg
-    return ap, nd
+    avep, dcg, found, n_judged = 0.0, 0.0, 0, 0
+    for _, _, rel in sorted(judged, key=lambda r: (-r[0], r[1])):
+        n_judged += 1
+        if rel == 1:
+            found += 1
+            avep += found / n_judged
+            dcg += math.log(2) / math.log(n_judged + 1)
+    idcg = sum(math.log(2) / math.log(i + 1) for i in range(1, total_rel + 1))
+    return avep / total_rel, dcg / idcg
 
 
 def evaluate_batch(
@@ -219,9 +203,10 @@ def evaluate_batch(
 ) -> tuple[DataFrame, dict]:
     """`evaluate()` semantics over ONE distributed plan for the whole query
     set (BM25 model): rankings come from :func:`bm25_topk_batch` (one
-    postings pass for all queries), judged ranks from a qid-partitioned
-    window, and exactly TWO scalars-per-query actions run regardless of
-    query count — per-qid result counts and per-qid (AP numerator, DCG).
+    postings pass for all queries), and ONE aggregation per call, whatever
+    the query count, returns per qid the result count and the judged hits
+    (:func:`_counts_and_judged`); AP/nDCG are computed from those on the
+    driver (:func:`_ap_ndcg`).
 
     The reference loops 635 queries sequentially (`ThemisEval.java:136-180`);
     on a cluster that serializes 635 job round-trips. This is the amortized
@@ -234,32 +219,18 @@ def evaluate_batch(
     jmap = _resolve_judged_docids(spark, tables, judgments)
     ranked = bm25_topk_batch(
         spark, tables, queries, k=k, pagerank_weight=pagerank_weight
-    ).persist()
-    try:
-        counts = {
-            r["qid"]: int(r["n"])
-            for r in ranked.groupBy("qid").agg(F.count("*").alias("n")).collect()
-        }
-        agg_map: dict[int, object] = {}
-        pair_rows = [
-            (qid, docid, rel)
-            for qid, prs in jmap.items()
-            for docid, rel in prs
-        ]
-        if pair_rows:
-            pj = local_rows_df(
-                spark, pair_rows, "qid int, docid long, rel int"
-            )
-            for r in _judged_sums(ranked, pj, ["qid"]).collect():
-                agg_map[int(r["qid"])] = r
-    finally:
-        ranked.unpersist()
+    )
+    pj = local_rows_df(
+        spark,
+        [(qid, docid, rel) for qid, prs in jmap.items() for docid, rel in prs],
+        "qid int, docid long, rel int",
+    )
+    by_qid = {r["qid"]: r for r in _counts_and_judged(ranked, pj, ["qid"])}
     dt = time.time() - t0
     per = dt / len(queries) if queries else 0.0
     rows = []
     for qid, qtext in queries:
-        ap, nd = _ap_ndcg(
-            agg_map.get(qid), judgments.get(qid, {}), bool(jmap.get(qid))
-        )
-        rows.append((qid, qtext, float(ap), float(nd), counts.get(qid, 0), per))
+        r = by_qid.get(qid)
+        ap, nd = _ap_ndcg(r["judged"] if r else [], judgments.get(qid, {}))
+        rows.append((qid, qtext, ap, nd, int(r["n"]) if r else 0, per))
     return _per_query_df_and_summary(spark, rows)

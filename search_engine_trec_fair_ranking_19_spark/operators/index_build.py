@@ -1047,7 +1047,8 @@ def _build_index_impl(
                     config.use_stopwords,
                 )
             ],
-            "n_docs long, avgdl double, use_stemmer boolean, use_stopwords boolean",
+            "n_docs long NOT NULL, avgdl double NOT NULL,"
+            " use_stemmer boolean NOT NULL, use_stopwords boolean NOT NULL",
         )
         write(cs, "collection_stats")
         dt = time.time() - t0

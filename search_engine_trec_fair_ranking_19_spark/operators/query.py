@@ -420,15 +420,24 @@ def bm25_topk(
 WAND_RARE_DF_DIVISOR = 1000
 
 
-def _wand_pays(pq: PreparedQuery, k: int, config: EngineConfig) -> bool:
-    """Routing of :func:`bm25_topk_wand` (measured,
-    BENCH/wand_crossover.json): pruning pays only when BOTH the decode
+def _wand_pays(
+    spark: SparkSession,
+    tables: IndexTables,
+    pq: PreparedQuery,
+    k: int,
+    config: EngineConfig,
+) -> bool:
+    """Routing of :func:`bm25_topk_wand`. ``wand_min_postings == 0`` always
+    runs WAND (tests, gate). With the decoded-postings cache open it never
+    does: the cached plan is one job with no decode. Otherwise (measured,
+    BENCH/wand_crossover.json) pruning pays only when BOTH the decode
     volume clears the crossover AND the query is selective — its rare terms
     (df ≤ N/divisor) must cover ≥ k docs so θ can rise above common-only
-    blocks' UB. ``wand_min_postings == 0`` always runs WAND (tests, gate).
-    Pure driver arithmetic on pq.dfs."""
+    blocks' UB. Driver arithmetic on pq.dfs."""
     if config.wand_min_postings == 0:
         return True
+    if tables.decoded_postings(spark) is not None:
+        return False
     rare_df_max = max(1, pq.n_docs // WAND_RARE_DF_DIVISOR)
     rare_cover = sum(df for df in pq.dfs if df <= rare_df_max)
     return sum(pq.dfs) >= config.wand_min_postings and rare_cover >= k
@@ -635,7 +644,7 @@ def bm25_topk_wand(
     def bm25(view: str) -> str:
         return _bm25_sql(view, pq, config)
 
-    if pagerank_weight != 0.0 or not _wand_pays(pq, k, config):
+    if pagerank_weight != 0.0 or not _wand_pays(spark, tables, pq, k, config):
         if stats is not None:
             stats["fallback"] = (
                 "exhaustive" if pagerank_weight == 0.0 else "exhaustive_pagerank_blend"

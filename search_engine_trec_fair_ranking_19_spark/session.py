@@ -5,8 +5,9 @@ from __future__ import annotations
 import contextlib
 import os
 
+import pyarrow as pa
 from pyspark.sql import SparkSession
-from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import _parse_datatype_string
 
 
@@ -31,20 +32,6 @@ def scoped_conf(spark: SparkSession, confs: dict[str, str]):
                 spark.conf.set(k, prev)
 
 
-# SQL literal type per atomic field type eligible for the LocalRelation
-# fast path (strings excluded: escaping under configurable parser modes is
-# where correctness bugs live — they take the parallelize fallback)
-_VALUES_SQL_TYPE = {
-    "LongType": "BIGINT",
-    "IntegerType": "INT",
-    "ShortType": "SMALLINT",
-    "ByteType": "TINYINT",
-    "DoubleType": "DOUBLE",
-    "FloatType": "FLOAT",
-    "BooleanType": "BOOLEAN",
-}
-
-
 def sql_double(v, sql_t: str = "DOUBLE") -> str:
     """Bit-exact SQL literal of a float, as ``sql_t`` (DOUBLE or FLOAT)."""
     f = float(v)
@@ -57,63 +44,23 @@ def sql_double(v, sql_t: str = "DOUBLE") -> str:
     return f"CAST({f!r} AS {sql_t})"
 
 
-def _values_cell(v, sql_t: str) -> str:
-    if v is None:
-        return f"CAST(NULL AS {sql_t})"
-    if sql_t == "BOOLEAN":
-        return "TRUE" if v else "FALSE"
-    if sql_t in ("DOUBLE", "FLOAT"):
-        return sql_double(v, sql_t)
-    return f"CAST({int(v)} AS {sql_t})"
-
-
 def local_rows_df(spark: SparkSession, rows, schema):
-    """Driver-built small DataFrame (≤ a few thousand rows), cheapest shape.
-
-    Fast path (all-numeric/boolean schemas, ≤2000 rows): a SQL ``VALUES``
-    LocalRelation. Collecting one is an ``executeCollect`` on
-    LocalTableScan — ZERO Spark jobs, no pickle→JVM round-trip. Measured:
-    build+collect of a 10-row top-k frame is ~30 ms vs ~220 ms (and one
-    whole job) for the parallelize shape — that job used to be 1 of the 3
-    jobs of every single bm25 query.
-
-    Fallback (strings/arrays/larger data): ``parallelize(rows, 1)``.
-    ``spark.createDataFrame(list)`` would split into defaultParallelism
-    slices, so every downstream action over a 20-row frame schedules
-    ~n_cores near-empty tasks, and a 1-row table write emits ~n_cores files
-    (all but one empty). One slice → one task / one file. Only for
-    driver-sized data — anything that should fan out (fixture corpora,
-    media tables) repartitions explicitly instead."""
+    """Driver-built small DataFrame (≤ a few thousand rows) as an
+    Arrow-backed LocalRelation: collecting it runs no Spark job and no
+    Python worker, and its RDD has at most one partition per row. A None in
+    a non-nullable field raises. Only for driver-sized data — anything that
+    should fan out (fixture corpora, media tables) repartitions explicitly
+    instead."""
     struct = (
         _parse_datatype_string(schema) if isinstance(schema, str) else schema
     )
-    if isinstance(struct, T.StructType) and len(rows) <= 2000:
-        sql_types = [
-            _VALUES_SQL_TYPE.get(type(f.dataType).__name__)
-            for f in struct.fields
-        ]
-        if all(t is not None for t in sql_types):
-            names = ", ".join(f.name for f in struct.fields)
-            if rows:
-                body = ", ".join(
-                    "(%s)"
-                    % ", ".join(
-                        _values_cell(v, t) for v, t in zip(r, sql_types)
-                    )
-                    for r in rows
-                )
-                tail = ""
-            else:  # VALUES needs ≥1 row; LIMIT 0 folds to an empty relation
-                body = "(%s)" % ", ".join(
-                    f"CAST(NULL AS {t})" for t in sql_types
-                )
-                tail = " LIMIT 0"
-            return spark.sql(
-                f"SELECT * FROM VALUES {body} AS __local__({names}){tail}"
-            )
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, numSlices=1), schema
+    arrow_schema = to_arrow_schema(struct)
+    columns = list(zip(*rows)) if rows else [()] * len(struct.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
     )
+    return spark.createDataFrame(table, struct)
 
 
 def _default_master(cpus: str) -> str:

@@ -274,7 +274,8 @@ def ingest_batch(
                     bool(stats["use_stopwords"]),
                 )
             ],
-            "n_docs long, avgdl double, use_stemmer boolean, use_stopwords boolean",
+            "n_docs long NOT NULL, avgdl double NOT NULL,"
+            " use_stemmer boolean NOT NULL, use_stopwords boolean NOT NULL",
         )
         cs.write.mode("overwrite").parquet(
             os.path.join(index_dir, "collection_stats_next")

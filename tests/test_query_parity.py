@@ -9,6 +9,7 @@ PageRank-blended configuration.
 import math
 
 import pytest
+from pyspark.sql import types as T
 
 from search_engine_trec_fair_ranking_19_spark.config import EngineConfig
 from search_engine_trec_fair_ranking_19_spark.operators import query as q
@@ -17,6 +18,7 @@ from search_engine_trec_fair_ranking_19_spark.operators.pagerank import (
     pagerank_table,
 )
 from search_engine_trec_fair_ranking_19_spark.oracle import engine as oracle
+from search_engine_trec_fair_ranking_19_spark.session import local_rows_df
 from search_engine_trec_fair_ranking_19_spark.sources.webtext import (
     corpus_pandas,
     corpus_spark,
@@ -205,25 +207,49 @@ def test_topk_with_docs_projection(spark, tables, oracle_index):
         assert r["url"] == inv[r["docid"]]
 
 
-def test_wand_threshold_routes_small_queries_to_exhaustive(spark, tables, oracle_index):
-    """Crossover behavior pin (BENCH/wand_crossover.json): below the
-    production wand_min_postings (Σ DF of the query terms under the measured
-    ~10M-posting crossover) bm25_topk_wand must take the exhaustive fallback
-    — and still return the identical ranking."""
-    stats = {}
-    got = q.bm25_topk_wand(
-        spark, tables, "web search", k=10,
-        config=CFG.with_(wand_min_postings=EngineConfig().wand_min_postings),
-        stats=stats,
+def test_wand_threshold_routes_small_queries_to_exhaustive(
+    spark, tables, oracle_index, monkeypatch
+):
+    """Routing pins of bm25_topk_wand, each returning the oracle's ranking:
+    below the production wand_min_postings (Σ DF of the query terms under
+    the measured crossover, BENCH/wand_crossover.json) it takes the
+    exhaustive fallback; with the decoded-postings cache open it takes it
+    for ANY nonzero threshold (WAND over the cache was measured 6× slower
+    than the cached plan); with the size gate closed, a selective query
+    that clears the threshold runs the pruned path; threshold 0 forces it."""
+    from search_engine_trec_fair_ranking_19_spark.operators.index_build import (
+        IndexTables,
     )
-    assert stats.get("fallback") == "exhaustive"
-    want = oracle.bm25_topk(oracle_index, "web search", k=10)
-    _assert_matches(got, want)
 
-    # forced WAND (threshold 0) runs the real pruned path on the same query
-    stats = {}
-    q.bm25_topk_wand(spark, tables, "web search", k=10, config=CFG, stats=stats)
+    def route(handle, query, k, config):
+        stats = {}
+        got = q.bm25_topk_wand(spark, handle, query, k=k, config=config, stats=stats)
+        _assert_matches(got, oracle.bm25_topk(oracle_index, query, k=k))
+        return stats
+
+    production = CFG.with_(wand_min_postings=EngineConfig().wand_min_postings)
+    assert route(tables, "web search", 10, production)["fallback"] == "exhaustive"
+
+    # one hapax term (df 1 ≤ n_docs/1000) covers k=1: selective, and Σ DF ≥ 1
+    hapax = min(
+        t for t, df in oracle_index.df.items() if df == 1 and t[1:].isdigit()
+    )
+    selective, cfg1 = f"{hapax} web", CFG.with_(wand_min_postings=1)
+    assert tables.decoded_postings(spark) is not None
+    assert route(tables, selective, 1, cfg1)["fallback"] == "exhaustive"
+
+    # forced WAND (threshold 0) runs the real pruned path with the cache open
+    stats = route(tables, "web search", 10, CFG)
     assert "fallback" not in stats and "theta" in stats
+
+    monkeypatch.setattr(IndexTables, "_decoded_fits", lambda self, spark: False)
+    closed = IndexTables(tables.path, tables.config)
+    try:
+        assert closed.decoded_postings(spark) is None
+        stats = route(closed, selective, 1, cfg1)
+        assert "fallback" not in stats and "theta" in stats
+    finally:
+        closed.refresh()
 
 
 def test_topk_result_is_driver_local(spark, tables):
@@ -244,6 +270,34 @@ def test_topk_result_is_driver_local(spark, tables):
         assert len(jst.getJobIdsForGroup(None)) - n0 == 0, "collect ran a job"
         # every slice non-empty (0 slices for the empty frame)
         assert df.rdd.getNumPartitions() <= max(1, len(rows))
+
+    # every driver frame (judgments, batch query terms, per-query results,
+    # stats rows) has the same shape: job-free, and exact
+    schema = "qid int, url string, rel int"
+    odd = ["", "plain", "it's", 'say "hi"', "back\\slash", "naïve 検索 ✓", "a\nb\tc"]
+    for rows in (
+        [],
+        [(1, None, None)],
+        [(i, s, i % 3) for i, s in enumerate(odd)],
+        [(i, f"https://example.org/{i}/'\"\\", i % 2) for i in range(5000)],
+    ):
+        df = local_rows_df(spark, rows, schema)
+        last = max(jst.getJobIdsForGroup(None), default=-1)
+        got = [tuple(r) for r in df.collect()]
+        assert [j for j in jst.getJobIdsForGroup(None) if j > last] == []
+        assert got == rows
+        assert df.rdd.getNumPartitions() <= len(rows)
+    floats = [0.1 + 0.2, -0.0, 5e-324, float("inf"), float("nan"), None]
+    rows = [(i, f, i % 2 == 0) for i, f in enumerate(floats)]
+    df = local_rows_df(spark, rows, "docid long, score double, flag boolean")
+    last = max(jst.getJobIdsForGroup(None), default=-1)
+    got = df.collect()
+    assert [j for j in jst.getJobIdsForGroup(None) if j > last] == []
+    assert [tuple(map(repr, r)) for r in got] == [tuple(map(repr, r)) for r in rows]
+    with pytest.raises(ValueError, match="non-nullable"):
+        local_rows_df(spark, [(None,)], T.StructType(
+            [T.StructField("url", T.StringType(), False)]
+        ))
 
 
 @pytest.mark.parametrize(
