@@ -93,36 +93,20 @@ def tf_map(
     return dict(Counter(analyze_text(text, use_stemmer, use_stopwords)))
 
 
-def tf_batch(texts, use_stemmer: bool = True, use_stopwords: bool = True):
-    """Vectorized batch analyzer: token-identical to per-doc :func:`tf_map`
-    but ~an order of magnitude faster for the index build's hot path.
-
-    Why it's fast: the raw split stays C-level (`str.translate` + `split`),
-    then `normalize_token` runs once per DISTINCT raw token in the batch —
-    Zipf-distributed text makes the distinct set tiny relative to the token
-    stream — and the per-(doc, term) counting is a single `np.unique` over an
-    int64 key (no per-token Python). Parity with `tf_map` is by construction:
-    the same split and the same pure `normalize_token` produce the same
-    multiset of (doc, term) pairs (pinned by tests/test_analysis.py).
-
-    Returns (doc_idx, term, tf, dl, max_tf) as numpy arrays, one row per
-    (document, normalized term): doc_idx indexes into ``texts``; dl/max_tf
-    are that document's token count / max TF (repeated per row).
-    """
-    import numpy as np
-
-    doc_idx, term_codes, terms, tf, dl, mtf = tf_batch_coded(
-        texts, use_stemmer, use_stopwords
-    )
-    return doc_idx, np.asarray(terms, dtype=object)[term_codes], tf, dl, mtf
-
-
 def tf_batch_coded(texts, use_stemmer: bool = True, use_stopwords: bool = True):
-    """Like :func:`tf_batch` but dictionary-coded: returns
-    (doc_idx, term_codes, terms, tf, dl, max_tf) where ``terms`` is the
-    per-batch distinct normalized-term dictionary and ``term_codes`` indexes
-    into it — the shape Arrow DictionaryArrays want, so the Spark tokenizer
-    never materializes one Python string per output row."""
+    """Vectorized batch analyzer, token-identical to per-doc :func:`tf_map`
+    and dictionary-coded: returns (doc_idx, term_codes, terms, tf, dl) as
+    numpy arrays, one row per (document, normalized term). ``doc_idx``
+    indexes into ``texts``, ``terms`` is the per-batch distinct
+    normalized-term dictionary and ``term_codes`` indexes into it (the shape
+    Arrow wants, so the Spark tokenizer never materializes one Python string
+    per output row), and ``dl`` is that document's token count, repeated per
+    row.
+
+    The raw split stays C-level (`str.translate` + `split`), and
+    `normalize_token` runs once per DISTINCT raw token in the batch —
+    Zipf-distributed text makes the distinct set tiny relative to the token
+    stream."""
     import numpy as np
     import pandas as pd
 
@@ -134,7 +118,6 @@ def tf_batch_coded(texts, use_stemmer: bool = True, use_stopwords: bool = True):
         np.empty(0, np.int64),
         np.empty(0, np.int64),
         np.empty(0, object),
-        np.empty(0, np.int64),
         np.empty(0, np.int64),
         np.empty(0, np.int64),
     )
@@ -167,18 +150,13 @@ def tf_batch_coded(texts, use_stemmer: bool = True, use_stopwords: bool = True):
     tf = np.bincount(kcodes)
     out_doc = (ukey // len(terms)).astype(np.int64)
     out_code = (ukey % len(terms)).astype(np.int64)
-    # per-doc dl / max_tf over the doc-grouped runs of ukey
+    # per-doc dl over the doc-grouped runs of ukey
     starts = np.concatenate(([0], np.flatnonzero(np.diff(out_doc)) + 1))
-    dl_per_run = np.add.reduceat(tf, starts)
-    mtf_per_run = np.maximum.reduceat(tf, starts)
-    run_id = np.zeros(len(out_doc), dtype=np.int64)
-    run_id[starts[1:]] = 1
-    run_id = np.cumsum(run_id)
+    dl = np.repeat(np.add.reduceat(tf, starts), np.diff(starts, append=len(tf)))
     return (
         out_doc,
         out_code,
         np.asarray(terms, dtype=object),
         tf.astype(np.int64),
-        dl_per_run[run_id],
-        mtf_per_run[run_id],
+        dl.astype(np.int64),
     )

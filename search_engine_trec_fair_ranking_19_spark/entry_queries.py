@@ -27,7 +27,6 @@ from .operators import query as q
 from .operators.evaluate import evaluate, evaluate_batch
 from .operators.index_build import IndexTables, build_index
 from .operators.pagerank import graph_stats, pagerank_table
-from .operators.query import matched_postings
 
 # analyzer OFF = SQL-expressible tokens (documents.text is lowercase words)
 GATE_CONFIG = EngineConfig(

@@ -17,9 +17,9 @@ Scale notes (the 100 TB design, see ARCHITECTURE.md):
   * posting blocks are keyed (term, block_id = docid // block_size): a head term
     with 10^9 postings becomes ~10^9/4096 independent shuffle keys — structural
     skew elimination; no single collect_list ever exceeds block_size entries.
-  * doc length (dl) and max_tf are computed inside the tokenizer UDF and ride
-    along each (docid, term) row, so BM25's doc-length join (`J3`) disappears
-    from the query path: blocks inline a dl stream.
+  * doc length (dl) is computed inside the tokenizer UDF and rides along
+    each (docid, term) row, so BM25's doc-length join (`J3`) disappears from
+    the query path: blocks inline a dl stream.
   * docid assignment avoids the single-partition global window: range-partition
     by url, count per range, prefix-sum offsets on the driver (P integers),
     then per-partition local row numbers — identical to rank(url) for any
@@ -42,7 +42,7 @@ from ..config import DEFAULT_CONFIG, EngineConfig
 from ..session import local_rows_df
 from ..functions.codec import decode_blocks_concat, encode_blocks_concat
 
-TOKENS_SCHEMA = "docid long, term string, tf int, dl int, max_tf int"
+TOKENS_SCHEMA = "docid long, term string, tf int, dl int"
 BLOCKS_SCHEMA = (
     "term string, block_id long, df int, max_tf int, min_dl int, "
     "gaps binary, tfs binary, dls binary"
@@ -111,14 +111,6 @@ def _right_size_for_cache(df: DataFrame) -> DataFrame:
 # filter scan of the cached vocabulary table (the driver can't hold a
 # 10^12-doc-scale vocabulary)
 VOCAB_DRIVER_CACHE_MAX_TERMS = 2_000_000
-
-# build-time doc_stats join strategy: up to this many vocabulary terms the
-# per-term DF broadcasts onto the cached token stream (one docid agg, no
-# extra shuffle); above it (a web-scale vocabulary can't be broadcast, and
-# Catalyst's silent fallback would reshuffle the whole token stream by term)
-# DF joins the 4096x-smaller postings BLOCKS table instead
-# (doc_stats_from_postings). Also read by the streaming ingest.
-DOC_STATS_BROADCAST_MAX_TERMS = 2_000_000
 
 # bytes one cached decoded posting takes in the in-memory columnar cache
 # (compressed: term runs, small docid deltas, dictionary-coded tf/dl).
@@ -489,7 +481,7 @@ def assign_doc_ids(webtext: DataFrame, num_ranges: int | None = None) -> DataFra
 
 
 def tokenize(docs: DataFrame, config: EngineConfig = DEFAULT_CONFIG) -> DataFrame:
-    """(docid, text) → (docid, term, tf, dl, max_tf): the A1 per-doc TF map as
+    """(docid, text) → (docid, term, tf, dl): the A1 per-doc TF map as
     a mapInArrow over the vectorized batch analyzer (`tf_batch_coded`:
     C-level split, normalize once per distinct raw token, hash-factorize
     counting — no per-token Python; token parity with the oracle's `tf_map`
@@ -512,7 +504,7 @@ def tokenize(docs: DataFrame, config: EngineConfig = DEFAULT_CONFIG) -> DataFram
             texts = batch.column(
                 batch.schema.get_field_index("text")
             ).to_pylist()
-            d, codes, terms, tfs, dls, mtfs = tf_batch_coded(
+            d, codes, terms, tfs, dls = tf_batch_coded(
                 texts, use_stemmer, use_stopwords
             )
             if len(d) == 0:
@@ -527,9 +519,8 @@ def tokenize(docs: DataFrame, config: EngineConfig = DEFAULT_CONFIG) -> DataFram
                     term_arr,
                     pa.array(tfs.astype(np.int32)),
                     pa.array(dls.astype(np.int32)),
-                    pa.array(mtfs.astype(np.int32)),
                 ],
-                names=["docid", "term", "tf", "dl", "max_tf"],
+                names=["docid", "term", "tf", "dl"],
             )
 
     return docs.select("docid", "text").mapInArrow(gen, schema=TOKENS_SCHEMA)
@@ -662,24 +653,20 @@ def build_postings_blocks(
     return grouped.mapInArrow(encode, schema=BLOCKS_SCHEMA)
 
 
-def decode_blocks(blocks: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
+def decode_blocks(blocks: DataFrame) -> DataFrame:
     """Encoded posting-block rows → one row per posting,
-    ``(*keep, term, docid, tf, dl)`` — the inverse of
+    ``(term, docid, tf, dl)`` — the inverse of
     :func:`build_postings_blocks`' encode, as one ``mapInArrow``.
 
-    ``keep`` carries extra block-level columns (e.g. the vocabulary's
-    ``term_df`` in :func:`doc_stats_from_postings`) to every posting of the
-    block. Per Arrow batch, the three binary columns' offsets and data
-    buffers go to ONE :func:`decode_blocks_concat` pass as they are (no
-    per-block Python object), and ``term`` / ``keep`` are expanded with an
-    Arrow ``take`` over each block's row index repeated by its posting
-    count. An empty input yields no rows."""
-    head = [*keep, "term"]
+    Per Arrow batch, the three binary columns' offsets and data buffers go
+    to ONE :func:`decode_blocks_concat` pass as they are (no per-block
+    Python object), and ``term`` is expanded with an Arrow ``take`` over
+    each block's row index repeated by its posting count. An empty input
+    yields no rows."""
     schema = T.StructType(
-        [blocks.schema[c] for c in head]
+        [blocks.schema["term"]]
         + [T.StructField(c, T.LongType()) for c in ("docid", "tf", "dl")]
     )
-    n_head = len(head)
 
     def decode(batches):
         import numpy as np
@@ -699,17 +686,17 @@ def decode_blocks(blocks: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
             if batch.num_rows == 0:
                 continue
             (gb, go), (tb, to), (db, do) = (
-                stream(batch.column(n_head + i)) for i in range(3)
+                stream(batch.column(i)) for i in (1, 2, 3)
             )
             docids, tfs, dls, voff = decode_blocks_concat(gb, go, tb, to, db, do)
             rows = pa.array(np.repeat(np.arange(batch.num_rows), np.diff(voff)))
             yield pa.RecordBatch.from_arrays(
-                [batch.column(i).take(rows) for i in range(n_head)]
+                [batch.column(0).take(rows)]
                 + [pa.array(docids), pa.array(tfs), pa.array(dls)],
                 names=schema.names,
             )
 
-    return blocks.select(*head, "gaps", "tfs", "dls").mapInArrow(decode, schema)
+    return blocks.select("term", "gaps", "tfs", "dls").mapInArrow(decode, schema)
 
 
 def write_postings(
@@ -729,93 +716,39 @@ def write_postings(
     ).parquet(out_path)
 
 
-def df_from_tokens(tokens: DataFrame) -> DataFrame:
-    """(term, df) from a token frame — used when no vocabulary table exists
-    yet (first streaming batch before any postings are written)."""
-    return tokens.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-
-
 def doc_stats_table(
-    tokens: DataFrame, n_docs: int, vocabulary: DataFrame | None = None
+    rows: DataFrame, n_docs: int, vocabulary: DataFrame
 ) -> DataFrame:
-    """(docid, token_count, max_tf, vsm_weight) — DOCUMENTS_META rebuild.
+    """(docid, token_count, max_tf, vsm_weight) — DOCUMENTS_META rebuild,
+    from any ``(term, docid, tf, dl)`` frame holding every posting of each
+    of its docs: the build's and an ingest batch's token frame, or
+    compaction's decoded postings.
 
     vsm_weight is the index-time VSM norm (`Indexer.updateVSMWeights:570-623`):
-    sqrt(Σ_t (TF_t · ln(N/DF_t))²) / maxTF — computed with a DF join, all
-    closed-form column math.
-
-    Pass ``vocabulary`` (term, df) when it already exists: the per-term DF
-    then comes from a small table the optimizer can broadcast, instead of a
-    full extra shuffle of the token frame by term."""
-    df_per_term = (
-        vocabulary.withColumnRenamed("df", "term_df")
-        if vocabulary is not None
-        else df_from_tokens(tokens).withColumnRenamed("df", "term_df")
-    )
+    sqrt(Σ_t (TF_t · ln(N/DF_t))²) / maxTF — one DF join against
+    ``vocabulary`` (term, df) and one docid aggregation, all closed-form
+    column math. The join carries no hint: the session's broadcast
+    threshold (and AQE's runtime sizes) broadcast the vocabulary whenever
+    it fits, and pick a shuffle join for a vocabulary that does not."""
     return (
-        tokens.join(df_per_term, "term")
+        rows.join(vocabulary.withColumnRenamed("df", "term_df"), "term")
         .groupBy("docid")
         .agg(
             F.first("dl").alias("token_count"),
-            F.first("max_tf").alias("max_tf"),
+            F.max("tf").alias("max_tf"),
             (
                 F.sqrt(
                     F.sum(
                         F.pow(
                             F.col("tf")
-                            * (F.log(F.lit(float(n_docs)) / F.col("term_df"))),
+                            * F.log(F.lit(float(n_docs)) / F.col("term_df")),
                             F.lit(2.0),
                         )
                     )
                 )
-                / F.first("max_tf")
+                / F.max("tf")
             ).alias("vsm_weight"),
         )
-    )
-
-
-def doc_stats_from_postings(
-    postings: DataFrame, vocabulary: DataFrame, n_docs: int
-) -> DataFrame:
-    """doc_stats computed from the postings BLOCKS table — the 10^12-doc path.
-
-    :func:`doc_stats_table` attaches per-term DF to the token stream with a
-    join against the vocabulary, which Catalyst executes as a broadcast only
-    while the vocabulary fits the broadcast budget. A web-scale vocabulary
-    (billions of distinct terms at 10^12 docs — urls, typos, numbers survive
-    stemming) cannot be broadcast, and the silent fallback is a sort-merge
-    join that reshuffles the ENTIRE token stream by term — the most
-    expensive possible plan for a metadata join.
-
-    This variant joins the vocabulary against the ENCODED blocks table
-    instead: one row per (term, block) — postings_block_size (4096) times
-    fewer rows than the token stream — so the term join is a small
-    co-keyed shuffle at any vocabulary size. DF rides the block rows
-    through the Arrow decode (``keep``), and one groupBy(docid) computes
-    token_count / max_tf / vsm_weight in a single aggregation (dl is
-    inlined per posting; max_tf is the doc-global max because every
-    posting of the doc is present). Same closed-form math as
-    `Indexer.updateVSMWeights:570-623`; selected by
-    ``DOC_STATS_BROADCAST_MAX_TERMS``."""
-    joined = postings.join(
-        vocabulary.withColumnRenamed("df", "term_df"), "term"
-    )
-    toks = decode_blocks(joined, keep=("term_df",))
-    return toks.groupBy("docid").agg(
-        F.first("dl").alias("token_count"),
-        F.max("tf").alias("max_tf"),
-        (
-            F.sqrt(
-                F.sum(
-                    F.pow(
-                        F.col("tf")
-                        * F.log(F.lit(float(n_docs)) / F.col("term_df")),
-                        F.lit(2.0),
-                    )
-                )
-            )
-            / F.max("tf")
-        ).alias("vsm_weight"),
     )
 
 
@@ -1014,21 +947,9 @@ def _build_index_impl(
         # N counts every parsed doc, including zero-token ones
         # (`Indexer.java:195-196`: N = docs parsed, avgdl = totalTokens / N)
         n_docs = n_docs_assigned
-        vocab_df = tables._read(spark, "vocabulary")
-        # parquet count() is metadata-only — choosing the join strategy
-        # costs no scan. Small vocab: broadcast DF onto the cached token
-        # stream (one docid agg, zero extra shuffles). Web-scale vocab
-        # (> DOC_STATS_BROADCAST_MAX_TERMS): DF joins the blocks table
-        # instead — see doc_stats_from_postings.
-        n_terms = vocab_df.count()
-        if n_terms <= DOC_STATS_BROADCAST_MAX_TERMS:
-            stats = doc_stats_table(
-                tokens, n_docs, vocabulary=F.broadcast(vocab_df)
-            )
-        else:
-            stats = doc_stats_from_postings(
-                tables._read(spark, "postings"), vocab_df, n_docs
-            )
+        stats = doc_stats_table(
+            tokens, n_docs, tables._read(spark, "vocabulary")
+        )
         # total tokens rides the doc_stats WRITE as an observed metric — no
         # separate read-back aggregation job (at 100 TB that job re-scans the
         # whole doc_stats table for one scalar)

@@ -59,12 +59,11 @@ from pyspark.sql import functions as F
 from ..config import DEFAULT_CONFIG, EngineConfig
 from ..session import local_rows_df
 from ..operators.index_build import (
-    DOC_STATS_BROADCAST_MAX_TERMS,
     IndexTables,
     assign_doc_ids,
     build_index,
     build_postings_blocks,
-    doc_stats_from_postings,
+    decode_blocks,
     doc_stats_table,
     tokenize,
     write_postings,
@@ -218,8 +217,7 @@ def ingest_batch(
         n_docs = n_committed + n_new
         tokens = tokenize(docs, config).persist()
         try:
-            blocks = build_postings_blocks(tokens, config)
-            append(blocks, "postings")
+            append(build_postings_blocks(tokens, config), "postings")
 
             # recompute the global vocabulary BEFORE doc_stats: the postings
             # table now includes this batch, so this aggregate IS the
@@ -239,20 +237,7 @@ def ingest_batch(
             vocab_now = spark.read.parquet(
                 os.path.join(index_dir, "vocabulary")
             )
-            # same join-strategy gate as build_index stage 4: broadcast DF
-            # onto this batch's tokens while the vocabulary fits; at
-            # web-scale vocabularies join DF against the batch's (much
-            # smaller) encoded blocks instead
-            if vocab_now.count() <= DOC_STATS_BROADCAST_MAX_TERMS:
-                batch_stats = doc_stats_table(
-                    tokens, n_docs, vocabulary=F.broadcast(vocab_now)
-                )
-            else:
-                # `blocks` is THIS batch's encoded frame (re-derived from
-                # the persisted tokens — one extra encode pass, far cheaper
-                # than reshuffling the token stream by term)
-                batch_stats = doc_stats_from_postings(blocks, vocab_now, n_docs)
-            append(batch_stats, "doc_stats")
+            append(doc_stats_table(tokens, n_docs, vocab_now), "doc_stats")
             # doc_ids last: it gates the url anti-join, so committed-looking
             # docs always have their postings/doc_stats already in place
             append(docs.select("docid", "url"), "doc_ids")
@@ -320,7 +305,6 @@ def compact_index(
     against the CURRENT global DF — after compaction the index is
     indistinguishable from a from-scratch batch build modulo docid order."""
     tables = IndexTables(index_dir, config)
-    from ..operators.query import decode_blocks
 
     # decode → re-block → re-encode: restores the term-range-sorted layout and
     # keeps blocks bounded/docid-sorted regardless of how many appends happened
@@ -333,12 +317,12 @@ def compact_index(
     _swap(index_dir, "postings", spark)
     tables.refresh()  # the cached postings frame points at replaced files
 
-    # exact doc_stats against the CURRENT global DF, in ONE decode + agg
-    # (doc_stats_from_postings computes max_tf inside the docid agg — the
-    # earlier two-pass decode→max→join→agg shape is strictly heavier)
+    # exact doc_stats against the CURRENT global DF, over the compacted
+    # postings: each doc's Σ (TF·IDF)² then sums in their term-range order,
+    # not in the order the appends left
     n_docs = int(tables.collection_stats(spark)["n_docs"])
-    stats = doc_stats_from_postings(
-        tables.postings(spark), tables.vocabulary(spark), n_docs
+    stats = doc_stats_table(
+        decode_blocks(tables.postings(spark)), n_docs, tables.vocabulary(spark)
     )
     stats.write.mode("overwrite").parquet(
         os.path.join(index_dir, "doc_stats_next")

@@ -467,9 +467,9 @@ def test_decode_blocks_empty_input(spark, tables):
         spark.createDataFrame([], blocks.schema),
         blocks.filter(F.col("term") == "zzzznotfound"),
     ):
-        out = q.decode_blocks(frame, keep=("block_id",))
+        out = q.decode_blocks(frame)
         assert out.collect() == []
-        assert out.columns == ["block_id", "term", "docid", "tf", "dl"]
+        assert out.columns == ["term", "docid", "tf", "dl"]
 
 
 def test_closed_size_gate_matches_decoded_cache(spark, tables, monkeypatch):
