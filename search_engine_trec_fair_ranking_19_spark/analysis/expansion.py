@@ -181,7 +181,7 @@ def mine_synonym_table(
     own token/vocabulary tables.
 
     ``tokens`` is a (docid, term) DataFrame (one row per distinct pair, e.g.
-    decoded postings); ``vocabulary`` is (term, df). For each term the top_k
+    the postings); ``vocabulary`` is (term, df). For each term the top_k
     partners by ``pmi = ln(pairs·N / (df_a·df_b))`` (ties broken by partner
     term asc — deterministic cross-engine) become its expansion candidates,
     PMI-descending, exactly what `SynonymTableExpander` consumes.

@@ -27,18 +27,18 @@ class EngineConfig:
     pagerank_threshold: float = 1e-8
     pagerank_max_iters: int = 200
 
-    # physical layout: postings are stored as bounded blocks of at most this
-    # many (docid, tf) entries so no single row ever holds a head term's full
-    # posting list (scale analogue of PARTIAL_INDEX_MAX_DOCS, themis.config:8)
+    # block-max WAND's metadata granularity: the posting_blocks table keeps
+    # (df, max_tf, min_dl) per (term, docid DIV this) block. The postings
+    # themselves are one row per posting at any block size.
     postings_block_size: int = 4096
 
-    # NOTE on skew: head-term aggregation needs no explicit salt column —
-    # the postings shuffle key is (term, block_id), which splits a head term's
-    # postings into bounded groups deterministically (see ARCHITECTURE.md §1).
-    # AQE skew-join handling covers the remaining join-side skew.
+    # NOTE on skew: head-term work needs no explicit salt column — the
+    # postings shuffle is a range partition on (term, docid), which splits a
+    # head term's postings across partitions (see ARCHITECTURE.md §1). AQE
+    # skew-join handling covers the remaining join-side skew.
 
     # below this many candidate postings (Σ DF over query terms) the WAND
-    # metadata/seed/prune passes cost more than decoding everything — fall
+    # metadata/seed/prune passes cost more than scoring everything — fall
     # back to the exhaustive plan (0 = always run real WAND; used by tests
     # and the correctness gate). Measured (BENCH/wand_crossover.json): WAND
     # first beats exhaustive at a 2M-doc hapax-enriched corpus, Σ DF ≈ 3.4M,
@@ -46,8 +46,8 @@ class EngineConfig:
     # common-only blocks' UB — 48 of 1479 block groups survive, 1.3-1.5× net
     # wall-clock win). The default sits just under that smallest measured
     # winning Σ DF. The second routing condition, selectivity, is
-    # ``query.WAND_RARE_DF_DIVISOR``. While the decoded-postings cache is
-    # open, any nonzero value routes to the cached plan.
+    # ``query.WAND_RARE_DF_DIVISOR``. While the postings relation is
+    # cached, any nonzero value routes to the cached plan.
     wand_min_postings: int = 3_000_000
 
     def with_(self, **kw) -> "EngineConfig":

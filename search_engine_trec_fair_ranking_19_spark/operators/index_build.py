@@ -2,24 +2,27 @@
 (`T/indexer/Indexer.java:85-236`, lifecycle in SURVEY.md §3.1).
 
 Stage map (reference → here):
-  parse + tokenize + partial segment agg   → scan + ``mapInPandas`` tokenizer
+  parse + tokenize + partial segment agg   → scan + ``mapInArrow`` tokenizer
                                              (per-doc TF map computed inside the
                                              UDF = A1 without a shuffle)
-  200k-doc partial indexes + K-way merge   → ONE shuffle: groupBy(term, block_id)
-                                             (`Indexer.java:173-177,307-362` all
-                                             collapse into Spark's sort shuffle)
-  postings binary blocks                   → delta+varint block rows
+  200k-doc partial indexes + K-way merge   → ONE shuffle: range partition on
+                                             (term, docid) (`Indexer.java:
+                                             173-177,307-362` all collapse into
+                                             Spark's sort shuffle)
+  postings binary blocks                   → sorted (term, docid, tf, dl)
+                                             Parquet columns, delta +
+                                             bit-packed by the JVM writer
   DOCUMENTS_META / INDEX_META              → doc_stats / collection_stats tables
   docID = parse order                      → docid = global rank of url
                                              (deterministic across cluster sizes)
 
 Scale notes (the 100 TB design, see ARCHITECTURE.md):
-  * posting blocks are keyed (term, block_id = docid // block_size): a head term
-    with 10^9 postings becomes ~10^9/4096 independent shuffle keys — structural
-    skew elimination; no single collect_list ever exceeds block_size entries.
+  * postings are one row per posting, so no row ever holds a head term's
+    posting list; block-max WAND's bounds live in the small
+    ``posting_blocks`` table keyed (term, block_id = docid // block_size).
   * doc length (dl) is computed inside the tokenizer UDF and rides along
     each (docid, term) row, so BM25's doc-length join (`J3`) disappears from
-    the query path: blocks inline a dl stream.
+    the query path.
   * docid assignment avoids the single-partition global window: range-partition
     by url, count per range, prefix-sum offsets on the driver (P integers),
     then per-partition local row numbers — identical to rank(url) for any
@@ -36,17 +39,11 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..config import DEFAULT_CONFIG, EngineConfig
-from ..session import local_rows_df
-from ..functions.codec import decode_blocks_concat, encode_blocks_concat
+from ..session import local_rows_df, scoped_conf
 
 TOKENS_SCHEMA = "docid long, term string, tf int, dl int"
-BLOCKS_SCHEMA = (
-    "term string, block_id long, df int, max_tf int, min_dl int, "
-    "gaps binary, tfs binary, dls binary"
-)
 
 STAGES = (
     "doc_ids",
@@ -56,10 +53,21 @@ STAGES = (
     "vocabulary",
 )
 
+# Parquet writer settings of the postings tables: the v2 writer encodes the
+# integer columns DELTA_BINARY_PACKED only with dictionary encoding off (with
+# it on, a column whose dictionary fits is dictionary-coded instead).
+# Measured on the 4,000-doc benchmark corpus: 0.757x the bytes of the
+# earlier varint blocks; Spark's default writer, 0.977x.
+_POSTINGS_PARQUET_CONF = {
+    "parquet.writer.version": "v2",
+    "parquet.enable.dictionary": "false",
+}
+
 
 # ~bytes of (compressed parquet) table per cached partition. 8 MB compressed
-# ≈ tens of MB of decode work per task — enough to amortize a task launch,
-# small enough that a 500k-doc postings table still fans out across cores.
+# ≈ tens of MB of column decompression and scan work per task — enough to
+# amortize a task launch, small enough that a 500k-doc postings table
+# still fans out across cores.
 _CACHE_BYTES_PER_PARTITION = 8 << 20
 
 
@@ -112,7 +120,7 @@ def _right_size_for_cache(df: DataFrame) -> DataFrame:
 # 10^12-doc-scale vocabulary)
 VOCAB_DRIVER_CACHE_MAX_TERMS = 2_000_000
 
-# bytes one cached decoded posting takes in the in-memory columnar cache
+# bytes one posting takes in the in-memory columnar cache
 # (compressed: term runs, small docid deltas, dictionary-coded tf/dl).
 # Measured 2.0 B on the sf0.01 gate corpus (12k postings) and 4.4 B on the
 # 4,000-doc benchmark corpus (293k postings in 1.29 MB); rounded up for
@@ -175,16 +183,12 @@ class IndexTables:
     drops partitions and the scan falls back to the parquet files — no
     local-disk double-write of a 100 TB table.
 
-    Postings are cached twice, each filled on first use:
-
-    * ``postings``: the compressed blocks, which block-max WAND reads,
-      because it prunes on block metadata before any decode;
-    * ``decoded_postings``: one row per posting, ``(term, docid, tf,
-      dl)``, decoded once per handle by one ``mapInArrow`` pass. Every
-      other query path filters it with ``term IN (...)``, so a query runs
-      no Python and scores in whole-stage codegen. Only cached while a
-      bound on its size fits (:meth:`_decoded_fits`); above it, queries
-      decode the compressed blocks they match, per query.
+    ``postings`` is one relation, ``(term, docid, tf, dl)``, one row per
+    posting; every query path filters it with ``term IN (...)``, so no
+    query runs Python. It is cached while a bound on its size fits
+    (:meth:`_decoded_fits`); above it, the same frame stays uncached, and
+    the term filter pushes down to the Parquet row-group statistics of the
+    term-sorted files.
 
     After any table mutation (streaming ingest / compaction), call
     :meth:`refresh`.
@@ -194,7 +198,7 @@ class IndexTables:
     config: EngineConfig
     io: object | None = None  # table-IO backend; None → ParquetDirIO(path)
     # per-handle state, dropped by a refresh() of any handle on the path:
-    # cached frames by table name (None = decoded postings over the size
+    # frames by table name (all persisted except postings over the size
     # gate), temp-view names by table name, the collection_stats row, the
     # driver vocabulary map, and the path's refresh generation it was
     # loaded at
@@ -232,26 +236,21 @@ class IndexTables:
 
         pc = self._path_caches()
         if name not in self._df_cache:
-            if name != "decoded_postings":
-                df = _right_size_for_cache(self._read(spark, name))
-            elif self._decoded_fits(spark):
-                df = decode_blocks(_right_size_for_cache(self._read(spark, "postings")))
-            else:
-                df = None
-            if df is not None:
+            df = _right_size_for_cache(self._read(spark, name))
+            if name != "postings" or self._decoded_fits(spark):
                 df = df.persist(StorageLevel.MEMORY_ONLY)
                 pc.persisted.append(df)
             self._df_cache[name] = df
         return self._df_cache[name]
 
     def _decoded_fits(self, spark: SparkSession) -> bool:
-        """Size gate of the decoded-postings cache: ``n_docs · avgdl`` (the
-        token count, ≥ Σ DF, so ≥ the posting count, and known without a
-        job) times the measured bytes per cached decoded posting must fit in
-        half the storage memory of the block managers that cache partitions.
-        The gate, not MEMORY_ONLY eviction, keeps the cache small: the term
+        """Size gate of the postings cache: ``n_docs · avgdl`` (the token
+        count, ≥ Σ DF, so ≥ the posting count, and known without a job)
+        times the measured bytes per cached posting must fit in half the
+        storage memory of the block managers that cache partitions. The
+        gate, not MEMORY_ONLY eviction, keeps the cache small: the term
         filter sits above the cached relation, so an evicted partition would
-        be recomputed by decoding every block in it."""
+        be recomputed by a full, unpruned scan of its files."""
         cs = self.collection_stats(spark)
         bound = cs["n_docs"] * cs["avgdl"] * _DECODED_BYTES_PER_POSTING
         return bound <= _storage_memory_bytes(spark) / 2
@@ -274,13 +273,13 @@ class IndexTables:
     def doc_stats(self, spark):  # (docid, token_count, max_tf, vsm_weight)
         return self._cached(spark, "doc_stats")
 
-    def postings(self, spark):  # BLOCKS_SCHEMA
+    def postings(self, spark) -> DataFrame:
+        """(term, docid, tf, dl), one row per posting; persisted only while
+        the size gate is open (:meth:`_decoded_fits`)."""
         return self._cached(spark, "postings")
 
-    def decoded_postings(self, spark) -> DataFrame | None:
-        """(term, docid, tf, dl), one row per posting; None when
-        the size gate is closed (:meth:`_decoded_fits`)."""
-        return self._cached(spark, "decoded_postings")
+    def posting_blocks(self, spark):  # (term, block_id, df, max_tf, min_dl)
+        return self._cached(spark, "posting_blocks")
 
     def vocabulary(self, spark):  # (term, df)
         return self._cached(spark, "vocabulary")
@@ -288,22 +287,18 @@ class IndexTables:
     def pagerank(self, spark):  # (docid, pagerank)
         return self._cached(spark, "pagerank")
 
-    def table_view(self, spark, name: str) -> str | None:
-        """Temp-view name over a cached table, registered in the live
-        session (temp views are per session: a ``newSession()`` on the same
-        handle registers its own). The single-query SQL statements read the
-        handle's cached DataFrames through these views, so a query's plan is
-        one `spark.sql` round-trip instead of hundreds of Py4J calls of
-        incremental plan building. None when the table is not cached
-        (decoded postings over the size gate)."""
+    def table_view(self, spark, name: str) -> str:
+        """Temp-view name over a handle's table frame, registered in the
+        live session (temp views are per session: a ``newSession()`` on the
+        same handle registers its own). The single-query SQL statements
+        read the handle's DataFrames through these views, so a query's plan
+        is one `spark.sql` round-trip instead of hundreds of Py4J calls of
+        incremental plan building."""
         self._path_caches()
         vname = self._view_names.get(name)
         if vname is None or not spark.catalog.tableExists(vname):
-            df = self._cached(spark, name)
-            if df is None:
-                return None
             vname = f"__themis_{name}_{abs(id(self))}"
-            _in_session(df, spark).createOrReplaceTempView(vname)
+            _in_session(self._cached(spark, name), spark).createOrReplaceTempView(vname)
             self._view_names[name] = vname
         return vname
 
@@ -526,194 +521,72 @@ def tokenize(docs: DataFrame, config: EngineConfig = DEFAULT_CONFIG) -> DataFram
     return docs.select("docid", "text").mapInArrow(gen, schema=TOKENS_SCHEMA)
 
 
-def build_postings_blocks(
-    tokens: DataFrame, config: EngineConfig = DEFAULT_CONFIG
-) -> DataFrame:
-    """(docid, term, tf, dl) → encoded posting-block rows (BLOCKS_SCHEMA).
+def write_postings(
+    spark: SparkSession, rows: DataFrame, block_size: int, write
+) -> dict:
+    """Write the postings relation ``(term, docid, tf, dl)`` of ``rows``
+    (any frame holding those columns: a token frame, or the postings
+    themselves) and its ``posting_blocks`` through ``write(frame, name)``:
+    the one layout for build, ingest append and compaction. Returns the
+    write's totals, ``n_postings`` and ``n_blocks``, observed on the blocks
+    write (no extra job).
 
-    ONE shuffle on (term, block_id) replaces the reference's partial-index
-    spill + K-way heap merge (`Indexer.java:173-177,307-362,439-469`): Spark's
-    shuffle IS the merge. The RANGE repartition leaves partitions
-    term-range-clustered — :func:`write_postings` then needs only a
-    partition-local sort of the (small) encoded rows to finish the
-    row-group-prunable physical layout. The range sampling pass runs against
-    the persisted token frame, so the Python tokenizer still executes exactly
+    ONE range shuffle on (term, docid) replaces the reference's
+    partial-index spill + K-way heap merge (`Indexer.java:173-177,
+    307-362,439-469`): Spark's shuffle IS the merge. Each partition is then
+    sorted on (term, docid), so every file is term-range-clustered (parquet
+    row-group min/max stats prune a query's term filter to a few row
+    groups) and each term's docids ascend (the within-block order invariant
+    of `Index.java:114-130`). The range sampling pass runs against the
+    caller's (persisted) frame, so a build's Python tokenizer still runs
     once per document.
 
-    Aggregation is a partition-local SORT + streaming run-detection encode,
-    not a hash aggregate: an earlier ObjectHashAggregate
-    (collect_list(struct) + sort_array) materialized every posting as JVM
-    objects inside the agg map — measured per-task CPU inflated 2.6x going
-    local[4]→local[16] on the allocation churn (this VM's first-touch
-    throughput SHRINKS 2x with 16 concurrent faulting threads — see
-    ARCHITECTURE.md §8), making the reduce stage the scaling ceiling of the
-    whole build. Tungsten's radix-ish sort reuses pooled pages, and the
-    encode kernel walks the sorted stream per Arrow batch with a bounded
-    (≤ one group) carry — no whole-partition materialization on either side
-    of the boundary (within-block docid order invariant `Index.java:114-130`
-    comes from the sort)."""
-    block_size = config.postings_block_size
+    ``posting_blocks`` is block-max WAND's per-block bounds, ``(term,
+    block_id, df, max_tf, min_dl)`` with ``block_id = docid DIV
+    block_size``: one GROUP BY, written term-sorted. A head term with 10^9
+    postings has ~10^9/block_size rows there; the postings themselves are
+    never grouped.
 
-    grouped = (
-        tokens.withColumn(
-            "block_id", (F.col("docid") / F.lit(block_size)).cast("long")
+    Both tables are written by the Parquet v2 writer with dictionary
+    encoding off (session-scoped around the writes, so it reaches every
+    table-IO backend), which stores the integer columns as
+    ``DELTA_BINARY_PACKED``: deltas plus bit-packed frame-of-reference
+    miniblocks, written by the JVM. This is the delta-gap + block
+    compression of the paper's design, not a LEB128 varint."""
+    from pyspark.sql import Observation
+
+    postings = (
+        rows.select("term", "docid", "tf", "dl")
+        .repartitionByRange("term", "docid")
+        .sortWithinPartitions("term", "docid")
+    )
+    obs = Observation("postings_totals")
+    blocks = (
+        rows.groupBy(
+            "term", (F.col("docid") / F.lit(block_size)).cast("long").alias("block_id")
         )
-        .repartitionByRange("term", "block_id")
-        .sortWithinPartitions("term", "block_id", "docid")
+        .agg(
+            F.count(F.lit(1)).cast("int").alias("df"),
+            F.max("tf").alias("max_tf"),
+            F.min("dl").alias("min_dl"),
+        )
+        .observe(
+            obs,
+            F.count(F.lit(1)).alias("n_blocks"),
+            F.sum("df").alias("n_postings"),
+        )
+        .sortWithinPartitions("term", "block_id")
     )
-
-    def encode(batches):
-        # mapInArrow over the SORTED (term, block_id, docid) stream: group
-        # boundaries are detected vectorized (Arrow compute on adjacent
-        # slices), per-group stats come from np.*.reduceat, and the posting
-        # streams encode through the same concat codec — ZERO per-posting and
-        # zero per-group Python. The tail rows after the last boundary of a
-        # batch belong to ONE (possibly continuing) group; they carry over as
-        # zero-copy Arrow slices, so the working set stays bounded by one
-        # batch + one block (≤ postings_block_size postings) regardless of
-        # partition size.
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        cols = ("term", "block_id", "docid", "tf", "dl")
-        carry: list | None = None  # [term, block_id, docid, tf, dl] arrays
-
-        def emit(t, blk, doc, tf, dl, starts):
-            # starts: int64 group-start indices into the arrays, first == 0;
-            # encodes len(starts) COMPLETE groups covering the whole range
-            n = len(doc)
-            offsets = np.concatenate((starts, [n]))
-            doc_np = np.asarray(doc, dtype=np.int64)
-            tf_np = np.asarray(tf, dtype=np.int64)
-            dl_np = np.asarray(dl, dtype=np.int64)
-            gb, gbuf, tb, tbuf, db, dbuf = encode_blocks_concat(
-                doc_np, tf_np, dl_np, offsets
-            )
-
-            def bin_array(bounds, buf):
-                return pa.Array.from_buffers(
-                    pa.binary(),
-                    len(bounds) - 1,
-                    [None, pa.py_buffer(bounds.astype(np.int32)), pa.py_buffer(buf)],
-                )
-
-            starts_pa = pa.array(starts, type=pa.int64())
-            return pa.RecordBatch.from_arrays(
-                [
-                    pc.take(t, starts_pa),
-                    pc.take(blk, starts_pa),
-                    pa.array(np.diff(offsets).astype(np.int32)),
-                    pa.array(
-                        np.maximum.reduceat(tf_np, starts).astype(np.int32)
-                    ),
-                    pa.array(
-                        np.minimum.reduceat(dl_np, starts).astype(np.int32)
-                    ),
-                    bin_array(gb, gbuf),
-                    bin_array(tb, tbuf),
-                    bin_array(db, dbuf),
-                ],
-                names=[
-                    "term", "block_id", "df", "max_tf", "min_dl",
-                    "gaps", "tfs", "dls",
-                ],
-            )
-
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            arrs = [
-                batch.column(batch.schema.get_field_index(c)) for c in cols
-            ]
-            if carry is not None:
-                arrs = [
-                    pa.concat_arrays([c, a.combine_chunks() if isinstance(a, pa.ChunkedArray) else a])
-                    for c, a in zip(carry, arrs)
-                ]
-            t, blk = arrs[0], arrs[1]
-            n = len(t)
-            # boundary where term OR block_id changes vs previous row
-            neq = pc.or_(
-                pc.not_equal(t.slice(1), t.slice(0, n - 1)),
-                pc.not_equal(blk.slice(1), blk.slice(0, n - 1)),
-            )
-            bounds = np.flatnonzero(np.asarray(neq, dtype=bool)) + 1
-            if bounds.size == 0:
-                carry = arrs  # whole batch is one (continuing) group
-                continue
-            last = int(bounds[-1])
-            starts = np.concatenate(([0], bounds[:-1])).astype(np.int64)
-            yield emit(*(a.slice(0, last) for a in arrs), starts)
-            carry = [a.slice(last) for a in arrs]
-
-        if carry is not None and len(carry[0]):
-            yield emit(*carry, np.zeros(1, dtype=np.int64))
-
-    return grouped.mapInArrow(encode, schema=BLOCKS_SCHEMA)
+    with scoped_conf(spark, _POSTINGS_PARQUET_CONF):
+        write(postings, "postings")
+        write(blocks, "posting_blocks")
+    got = obs.get
+    return {"n_postings": int(got["n_postings"] or 0), "n_blocks": got["n_blocks"]}
 
 
-def decode_blocks(blocks: DataFrame) -> DataFrame:
-    """Encoded posting-block rows → one row per posting,
-    ``(term, docid, tf, dl)`` — the inverse of
-    :func:`build_postings_blocks`' encode, as one ``mapInArrow``.
-
-    Per Arrow batch, the three binary columns' offsets and data buffers go
-    to ONE :func:`decode_blocks_concat` pass as they are (no per-block
-    Python object), and ``term`` is expanded with an Arrow ``take`` over
-    each block's row index repeated by its posting count. An empty input
-    yields no rows."""
-    schema = T.StructType(
-        [blocks.schema["term"]]
-        + [T.StructField(c, T.LongType()) for c in ("docid", "tf", "dl")]
-    )
-
-    def decode(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        def stream(arr):
-            # (data bytes, byte offsets from 0) of a binary column, zero-copy
-            bufs = arr.buffers()
-            width = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
-            offs = np.frombuffer(bufs[1], dtype=width)[
-                arr.offset : arr.offset + len(arr) + 1
-            ].astype(np.int64)
-            data = np.frombuffer(bufs[2], dtype=np.uint8) if bufs[2] else b""
-            return data[offs[0] : offs[-1]], offs - offs[0]
-
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            (gb, go), (tb, to), (db, do) = (
-                stream(batch.column(i)) for i in (1, 2, 3)
-            )
-            docids, tfs, dls, voff = decode_blocks_concat(gb, go, tb, to, db, do)
-            rows = pa.array(np.repeat(np.arange(batch.num_rows), np.diff(voff)))
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(0).take(rows)]
-                + [pa.array(docids), pa.array(tfs), pa.array(dls)],
-                names=schema.names,
-            )
-
-    return blocks.select("term", "gaps", "tfs", "dls").mapInArrow(decode, schema)
-
-
-def write_postings(
-    spark: SparkSession,
-    blocks: DataFrame,
-    out_path: str,
-) -> None:
-    """Write posting blocks term-range-sorted (parquet row-group min/max stats
-    then prune query-term scans to a few row groups).
-
-    ``blocks`` from :func:`build_postings_blocks` is already range-partitioned
-    on (term, block_id); a partition-local sort of the encoded (small) rows
-    finishes the physical layout — no extra shuffle, no persist, one write
-    job."""
-    blocks.sortWithinPartitions("term", "block_id").write.mode(
-        "overwrite"
-    ).parquet(out_path)
+def vocabulary_table(posting_blocks: DataFrame) -> DataFrame:
+    """(term, df): Σ df over a term's posting blocks."""
+    return posting_blocks.groupBy("term").agg(F.sum("df").alias("df"))
 
 
 def doc_stats_table(
@@ -722,7 +595,7 @@ def doc_stats_table(
     """(docid, token_count, max_tf, vsm_weight) — DOCUMENTS_META rebuild,
     from any ``(term, docid, tf, dl)`` frame holding every posting of each
     of its docs: the build's and an ingest batch's token frame, or
-    compaction's decoded postings.
+    compaction's re-sorted postings.
 
     vsm_weight is the index-time VSM norm (`Indexer.updateVSMWeights:570-623`):
     sqrt(Σ_t (TF_t · ln(N/DF_t))²) / maxTF — one DF join against
@@ -771,8 +644,6 @@ def build_index(
     natively; on Iceberg each completed stage is additionally a catalog
     snapshot).
     """
-    from ..session import scoped_conf
-
     # scan-split floor, scoped to THIS build: a bench-sized corpus (one
     # parquet file < maxPartitionBytes) must not collapse to 3-4 scan tasks
     # and serialize the Python tokenizer. Session-wide this knob taxed every
@@ -825,10 +696,13 @@ def _build_index_impl(
     }
 
     def done(stage: str) -> bool:
+        # the postings stage writes two tables; an index whose postings
+        # stage predates posting_blocks (varint-block postings) rebuilds it
+        names = ("postings", "posting_blocks") if stage == "postings" else (stage,)
         return (
             resume
             and manifest["stages"].get(stage, {}).get("status") == "ok"
-            and io.exists(spark, stage)
+            and all(io.exists(spark, n) for n in names)
         )
 
     def record(stage: str, t0: float, rows: int | None = None, **extra) -> None:
@@ -884,43 +758,26 @@ def _build_index_impl(
     if n_input_rows != n_docs_assigned:
         docs = _dedup_by_docid(docs)
 
-    # ---- stage 2: tokenize → postings blocks (POSTINGS rebuild) ------------
-    # ONE term-shuffle for the whole build: postings come first, vocabulary
-    # and doc_stats reuse the (small) block/vocabulary tables instead of
+    # ---- stage 2: tokenize → postings + posting_blocks (POSTINGS rebuild) --
+    # ONE term-shuffle for the whole build: vocabulary and doc_stats reuse
+    # the token frame and the (small) posting_blocks table instead of
     # re-shuffling tokens by term. The tokens cache fills during the range
     # sampling pass, so the Python analyzer runs exactly once per document.
     tokens = tokenize(docs, config).persist()
     if not done("postings"):
         t0 = time.time()
-        blocks = build_postings_blocks(tokens, config)
         # stage metrics (north rule: postings/sec + bytes compressed per
-        # partition, logged per stage) ride the write as observed metrics —
+        # partition, logged per stage) ride the writes as observed metrics —
         # no read-back aggregation job
-        from pyspark.sql import Observation
-
-        obs_p = Observation("postings_totals")
-        blocks = blocks.observe(
-            obs_p,
-            F.count(F.lit(1)).alias("n_blocks"),
-            F.sum("df").alias("n_postings"),
-            F.sum(
-                F.octet_length("gaps")
-                + F.octet_length("tfs")
-                + F.octet_length("dls")
-            ).alias("payload_bytes"),
-        )
-        # partition-local sort of the encoded rows finishes the term-range
-        # physical layout (row-group pruning); one write, no extra shuffle
-        write(blocks.sortWithinPartitions("term", "block_id"), "postings")
-        got = obs_p.get
-        dt = max(time.time() - t0, 1e-9)
+        got = write_postings(spark, tokens, config.postings_block_size, write)
         record(
             "postings",
             t0,
-            rows=got["n_blocks"],
-            n_postings=int(got["n_postings"] or 0),
-            postings_per_sec=round((got["n_postings"] or 0) / dt, 1),
-            encoded_payload_bytes=int(got["payload_bytes"] or 0),
+            rows=got["n_postings"],
+            **got,
+            postings_per_sec=round(
+                got["n_postings"] / max(time.time() - t0, 1e-9), 1
+            ),
             bytes_compressed_per_partition=_partition_file_bytes(
                 tables.path, "postings"
             ),
@@ -933,12 +790,7 @@ def _build_index_impl(
     # path, turning out-of-band appends (streaming ingest) invisible.
     if not done("vocabulary"):
         t0 = time.time()
-        vocab = (
-            tables._read(spark, "postings")
-            .groupBy("term")
-            .agg(F.sum("df").alias("df"))
-        )
-        write(vocab, "vocabulary")
+        write(vocabulary_table(tables._read(spark, "posting_blocks")), "vocabulary")
         record("vocabulary", t0)
 
     # ---- stage 4+5: doc_stats + collection_stats ---------------------------

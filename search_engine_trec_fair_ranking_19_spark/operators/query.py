@@ -7,12 +7,12 @@ posting relation (term, docid, tf, dl),
   SELECT docid, <raw> AS raw FROM <posting view> WHERE term IN (:t0, ...)
   GROUP BY docid [HAVING ...]
 
-  * posting view: the handle's decoded-postings cache (decoded once per
-    handle by one mapInArrow pass; MEMORY_ONLY, term-sorted, size-gated —
-    `IndexTables`), so the IN filter prunes in-memory batches on the term
-    stats and a query runs no Python. Over the size gate, and for block-max
-    WAND's seed/survivors, the query's own decoded frame is registered as a
-    temp view instead and the same statement runs over it.
+  * posting view: the handle's postings relation (`IndexTables`): while
+    its size gate is open, MEMORY_ONLY-cached, so the IN filter prunes
+    in-memory batches on the term stats; over the gate, the uncached
+    Parquet scan, where the IN filter prunes row groups. No query runs
+    Python. For block-max WAND's seed/survivors, a filtered frame of it is
+    registered as a temp view instead and the same statement runs over it.
   * query terms are bound as named parameter markers and never formatted
     into the text, so no term needs escaping; per-term weights/idfs are
     ``map(:t0, w0, ...)[term]`` lookups with bit-exact ``repr`` double
@@ -59,7 +59,7 @@ from ..config import EngineConfig
 from ..oracle.engine import merge_terms
 from ..session import local_rows_df as _local_df
 from ..session import sql_double
-from .index_build import IndexTables, _in_session, decode_blocks
+from .index_build import IndexTables, _in_session
 
 TOPK_SCHEMA = T.StructType(
     [
@@ -119,13 +119,15 @@ def matched_postings(
     spark: SparkSession, tables: IndexTables, terms: list[str]
 ) -> DataFrame:
     """J2: the query terms' postings as (term, docid, tf, dl) rows — a
-    ``term IN`` filter over the handle's decoded-postings cache, or, when
-    that cache is over its size gate, a decode of the matching compressed
-    blocks."""
-    decoded = tables.decoded_postings(spark)
-    if decoded is None:
-        return decode_blocks(tables.postings(spark).filter(F.col("term").isin(terms)))
-    return decoded.filter(F.col("term").isin(terms))
+    ``term IN`` filter over the handle's postings relation."""
+    return tables.postings(spark).filter(F.col("term").isin(terms))
+
+
+def decode_blocks(postings: DataFrame) -> DataFrame:
+    """``postings`` as (term, docid, tf, dl). Kept only for the benchmark's
+    traced layer probes (`perfbench/layers.py`), which time it against a
+    plain read of the same rows."""
+    return postings.select("term", "docid", "tf", "dl")
 
 
 # ---------------------------------------------------------------------------
@@ -238,23 +240,15 @@ def _set_sql(view: str, pq: PreparedQuery, every_term: bool) -> str:
 
 @contextlib.contextmanager
 def _posting_view(
-    spark: SparkSession,
-    tables: IndexTables,
-    pq: PreparedQuery,
-    frame: DataFrame | None = None,
+    spark: SparkSession, tables: IndexTables, frame: DataFrame | None = None
 ):
     """Name of the (term, docid, tf, dl) relation a statement reads: the
-    handle's decoded-postings view, or ``frame`` (by default, when that
-    cache is over its size gate, the query's matched blocks decoded)
-    registered as a temp view of the live session for the block. ``frame``
-    must not be a cached relation: dropping a temp view uncaches the plan
-    it names."""
+    handle's postings view, or ``frame`` registered as a temp view of the
+    live session for the block. ``frame`` must not be a cached relation:
+    dropping a temp view uncaches the plan it names."""
     if frame is None:
-        view = tables.table_view(spark, "decoded_postings")
-        if view is not None:
-            yield view
-            return
-        frame = matched_postings(spark, tables, [t for t, _ in pq.terms])
+        yield tables.table_view(spark, "postings")
+        return
     name = f"__themis_query_{uuid.uuid4().hex}"
     _in_session(frame, spark).createOrReplaceTempView(name)
     try:
@@ -283,7 +277,7 @@ def _rank(
     """Run a model's statement ``render(view)`` to a ranked (docid, score)
     frame. ``const_one``: the raw score is the constant 1.0 (the set
     models)."""
-    with _posting_view(spark, tables, pq, frame) as view:
+    with _posting_view(spark, tables, frame) as view:
         sql = render(view)
         if k is not None and pagerank_weight == 0.0:
             return _normalized_rows_df(spark, _topk_rows(spark, sql, pq, k))
@@ -428,15 +422,15 @@ def _wand_pays(
     config: EngineConfig,
 ) -> bool:
     """Routing of :func:`bm25_topk_wand`. ``wand_min_postings == 0`` always
-    runs WAND (tests, gate). With the decoded-postings cache open it never
-    does: the cached plan is one job with no decode. Otherwise (measured,
-    BENCH/wand_crossover.json) pruning pays only when BOTH the decode
+    runs WAND (tests, gate). With the postings relation cached it never
+    does: the cached plan is one job. Otherwise (measured,
+    BENCH/wand_crossover.json) pruning pays only when BOTH the posting
     volume clears the crossover AND the query is selective — its rare terms
     (df ≤ N/divisor) must cover ≥ k docs so θ can rise above common-only
     blocks' UB. Driver arithmetic on pq.dfs."""
     if config.wand_min_postings == 0:
         return True
-    if tables.decoded_postings(spark) is not None:
+    if tables.postings(spark).is_cached:
         return False
     rare_df_max = max(1, pq.n_docs // WAND_RARE_DF_DIVISOR)
     rare_cover = sum(df for df in pq.dfs if df <= rare_df_max)
@@ -607,7 +601,7 @@ def bm25_topk_wand(
     pagerank_weight: float | None = None,
 ) -> DataFrame:
     """Block-max WAND BM25+ top-k — rank-identical to :func:`bm25_topk`, but
-    prunes posting blocks by metadata before any decode work.
+    prunes posting blocks by metadata before scoring their postings.
 
     The reference scores every posting exhaustively (`OkapiBM25P.java:51-88`);
     this is the scale extension from SURVEY.md §4 / the north rule. Spark-first
@@ -617,14 +611,18 @@ def bm25_topk_wand(
          query terms, an upper bound on the per-doc BM25 contribution from the
          stored `max_tf` / `min_dl` (:func:`_bm25_block_bound`). Summing over
          terms per block_id gives UB(group) ≥ best possible raw score of any
-         doc in that docid range. Pure column math on the compressed-postings
-         view — the gaps/tfs/dls binaries are never touched.
-      2. **Seed.** Decode only the top groups by UB (enough to cover ≥ k docs),
-         score exactly, take the k-th raw score as threshold θ.
+         doc in that docid range. Pure column math on the ``posting_blocks``
+         view — no posting is read.
+      2. **Seed.** Score exactly only the postings of the top groups by UB
+         (enough to cover ≥ k docs), take the k-th raw score as threshold θ.
       3. **Prune + exact.** Keep groups with UB ≥ θ (distributed filter on the
-         metadata), decode + score only those with the bm25 statement
+         metadata), score only their postings with the bm25 statement
          (`ORDER BY raw DESC, docid ASC LIMIT k`: TakeOrderedAndProject =
          bounded per-partition min-heap + driver merge).
+
+    A posting's group is ``CAST(docid / block_size AS BIGINT)``, the build's
+    own ``block_id`` formula, so seed and survivors are docid filters on the
+    postings relation.
 
     Any pruned doc scores ≤ UB(group) < θ ≤ true k-th score, so the result —
     including the max-normalization constant, whose argmax doc always survives
@@ -651,14 +649,16 @@ def bm25_topk_wand(
             )
         return _rank(spark, tables, pq, bm25, k, pagerank_weight)
 
-    blocks = tables.postings(spark).filter(F.col("term").isin([t for t, _ in pq.terms]))
+    terms = [t for t, _ in pq.terms]
+    block_id = (F.col("docid") / F.lit(tables.config.postings_block_size)).cast("long")
+    postings = matched_postings(spark, tables, terms).withColumn("block_id", block_id)
     bound = _bm25_block_bound(
         _per_term([w for _, w in pq.terms]), _per_term(pq.idfs), config, pq.avgdl
     )
     group_ub = spark.sql(
         f"SELECT block_id, sum({bound}) + {sql_double(sum(pq.idfs))} AS group_ub,"
         # ≥ distinct docs reachable via one term
-        f" max(df) AS min_docs FROM {tables.table_view(spark, 'postings')}"
+        f" max(df) AS min_docs FROM {tables.table_view(spark, 'posting_blocks')}"
         f" WHERE {_term_filter(pq)} GROUP BY block_id",
         args=_term_args(pq),
     ).persist()
@@ -671,7 +671,7 @@ def bm25_topk_wand(
         # different high-UB groups (one rare doc each), and a θ taken from a
         # single group sits at common-doc level, pruning nothing (measured:
         # 381/381 groups survived on 12-rare-term queries before this floor).
-        # Seed decode stays O(k) groups regardless of corpus size.
+        # The seed scores O(k) groups regardless of corpus size.
         seed_rows = (
             group_ub.orderBy(F.desc("group_ub"), F.asc("block_id"))
             .select("block_id", "min_docs")
@@ -685,26 +685,25 @@ def bm25_topk_wand(
             covered += r["min_docs"]
             if covered >= 4 * k and len(seed_ids) >= min_groups:
                 break
-        seed = decode_blocks(blocks.filter(F.col("block_id").isin(seed_ids)))
-        with _posting_view(spark, tables, pq, seed) as view:
+        seed = postings.filter(F.col("block_id").isin(seed_ids))
+        with _posting_view(spark, tables, seed) as view:
             seed_top = _topk_rows(spark, bm25(view), pq, k)
         theta = seed_top[-1]["raw"] if seed_top else None
 
-        if theta is None or len(seed_top) < k:
-            survivors = blocks  # not enough docs to fill k: no safe pruning
-        else:
-            keep = group_ub.filter(F.col("group_ub") >= F.lit(theta)).select(
-                "block_id"
-            )
-            survivors = blocks.join(F.broadcast(keep), "block_id", "left_semi")
+        def surviving(frame: DataFrame) -> DataFrame:
+            if theta is None or len(seed_top) < k:
+                return frame  # not enough docs to fill k: no safe pruning
+            keep = group_ub.filter(F.col("group_ub") >= F.lit(theta))
+            return frame.join(F.broadcast(keep.select("block_id")), "block_id", "left_semi")
 
         if stats is not None:
+            blocks = tables.posting_blocks(spark).filter(F.col("term").isin(terms))
             stats["theta"] = theta
             stats["n_blocks_total"] = blocks.count()
-            stats["n_blocks_survived"] = survivors.count()
+            stats["n_blocks_survived"] = surviving(blocks).count()
             stats["n_seed_groups"] = len(seed_ids)
 
-        return _rank(spark, tables, pq, bm25, k, frame=decode_blocks(survivors))
+        return _rank(spark, tables, pq, bm25, k, frame=surviving(postings))
     finally:
         group_ub.unpersist()
 

@@ -114,10 +114,11 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # rows entering UDFs can be FAT (posting blocks carry ~4096-entry
-        # arrays ≈ 64 KB/row): 10k-row batches would be ~GB-sized per worker
-        # × 32 workers. 1024 keeps worst-case batches ~64 MB while thin-row
-        # UDFs (tokenizer) still amortize fine.
+        # rows entering Arrow UDFs can be FAT (the tokenizer's input row is
+        # a whole document, tens of KB for a long web page; ~64 KB/row):
+        # 10k-row batches would be ~GB-sized per worker × 32 workers. 1024
+        # keeps worst-case batches ~64 MB while thin-row UDFs still
+        # amortize fine.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         # NOTE: no session-wide spark.sql.files.minPartitionNum — a scan-split

@@ -5,10 +5,11 @@ rebuilding the whole index. At web scale the corpus arrives continuously, so
 this module maintains the SAME five index tables (`operators/index_build.py`)
 under append-only ingestion, LSM-style:
 
-  * each micro-batch appends new `(term, block_id)` posting-block rows — new
-    docs get docids past the current maximum, so new blocks never collide
-    with existing block ranges and every invariant (bounded blocks, docid-
-    sorted, dl inlined) is preserved;
+  * each micro-batch appends its `(term, docid, tf, dl)` postings and their
+    `(term, block_id)` WAND bounds — new docs get docids past the current
+    maximum, so each appended file is itself (term, docid)-sorted and every
+    invariant (docid-ascending per term within a file, dl inlined) is
+    preserved;
   * `collection_stats` (N, avgdl) and `vocabulary` (DF) are refreshed per
     batch, so BM25 scores after ingesting a corpus are EXACTLY the scores of
     a from-scratch batch build over the same corpus (only docid assignment —
@@ -62,10 +63,9 @@ from ..operators.index_build import (
     IndexTables,
     assign_doc_ids,
     build_index,
-    build_postings_blocks,
-    decode_blocks,
     doc_stats_table,
     tokenize,
+    vocabulary_table,
     write_postings,
 )
 
@@ -93,7 +93,7 @@ def _record_ingested(index_dir: str, batch_id: int) -> None:
         json.dump(sorted(done), f)
 
 
-_APPENDED_TABLES = ("doc_ids", "doc_stats", "postings")
+_APPENDED_TABLES = ("doc_ids", "doc_stats", "postings", "posting_blocks")
 
 
 def _batch_prefix(batch_id: int) -> str:
@@ -217,18 +217,16 @@ def ingest_batch(
         n_docs = n_committed + n_new
         tokens = tokenize(docs, config).persist()
         try:
-            append(build_postings_blocks(tokens, config), "postings")
+            write_postings(spark, tokens, config.postings_block_size, append)
 
-            # recompute the global vocabulary BEFORE doc_stats: the postings
+            # recompute the global vocabulary BEFORE doc_stats: the blocks
             # table now includes this batch, so this aggregate IS the
             # post-ingest DF snapshot — the batch's vsm_weight is computed
             # against it. (Earlier batches keep weights from their own
             # ingest-time N/DF — point-in-time, like the reference's
             # one-shot updateVSMWeights; compact_index recomputes exactly.)
-            vocab = (
-                spark.read.parquet(os.path.join(index_dir, "postings"))
-                .groupBy("term")
-                .agg(F.sum("df").alias("df"))
+            vocab = vocabulary_table(
+                spark.read.parquet(os.path.join(index_dir, "posting_blocks"))
             )
             vocab.write.mode("overwrite").parquet(
                 os.path.join(index_dir, "vocabulary_next")
@@ -301,20 +299,23 @@ def compact_index(
     """Merge appended posting deltas and recompute exact VSM norms.
 
     Re-sorts the postings table into term-range order (restoring row-group
-    pruning quality degraded by appends) and recomputes `doc_stats.vsm_weight`
+    pruning quality degraded by appends), recomputes its WAND block bounds
+    (merging the blocks appends split) and recomputes `doc_stats.vsm_weight`
     against the CURRENT global DF — after compaction the index is
     indistinguishable from a from-scratch batch build modulo docid order."""
     tables = IndexTables(index_dir, config)
 
-    # decode → re-block → re-encode: restores the term-range-sorted layout and
-    # keeps blocks bounded/docid-sorted regardless of how many appends happened
-    tokens = decode_blocks(tables.postings(spark))  # (term, docid, tf, dl)
+    # one range shuffle + sort restores the term-range-sorted layout, and
+    # one GROUP BY merges the blocks appends split, however many appends
+    # happened
+    def write_next(df: DataFrame, name: str) -> None:
+        df.write.mode("overwrite").parquet(os.path.join(index_dir, name + "_next"))
+
     write_postings(
-        spark,
-        build_postings_blocks(tokens, config),
-        os.path.join(index_dir, "postings_next"),
+        spark, tables._read(spark, "postings"), config.postings_block_size, write_next
     )
     _swap(index_dir, "postings", spark)
+    _swap(index_dir, "posting_blocks", spark)
     tables.refresh()  # the cached postings frame points at replaced files
 
     # exact doc_stats against the CURRENT global DF, over the compacted
@@ -322,7 +323,7 @@ def compact_index(
     # not in the order the appends left
     n_docs = int(tables.collection_stats(spark)["n_docs"])
     stats = doc_stats_table(
-        decode_blocks(tables.postings(spark)), n_docs, tables.vocabulary(spark)
+        tables._read(spark, "postings"), n_docs, tables.vocabulary(spark)
     )
     stats.write.mode("overwrite").parquet(
         os.path.join(index_dir, "doc_stats_next")

@@ -58,9 +58,6 @@ def test_duplicate_urls_collapse_to_one_docid(spark, tmp_path):
         assign_doc_ids,
         build_index,
     )
-    from search_engine_trec_fair_ranking_19_spark.operators.query import (
-        decode_blocks,
-    )
 
     rows = [
         (f"https://ex.org/{i:04d}", f"common tok{i} text body") for i in range(50)
@@ -88,7 +85,7 @@ def test_duplicate_urls_collapse_to_one_docid(spark, tmp_path):
         spark, webtext, str(tmp_path / "idx"), EngineConfig()
     )
     assert tables.doc_ids(spark).count() == 50
-    toks = decode_blocks(tables.postings(spark))
+    toks = tables.postings(spark)
     # no doubled TFs: every (term, docid) appears exactly once
     assert (
         toks.groupBy("term", "docid").count().filter(F.col("count") > 1).count()

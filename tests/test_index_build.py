@@ -2,19 +2,22 @@
 
 Builds the index over the deterministic synthetic webtext corpus and asserts
 every derived table matches the oracle exactly: docids, vocabulary DFs,
-doc_stats, collection stats, decoded posting blocks, per-row text invariant.
+doc_stats, collection stats, postings and their WAND block bounds, the
+postings' on-disk encoding, per-row text invariant.
 A property test checks doc_stats on degenerate documents (no tokens, only
 stopwords, one token, one repeated term, unicode, a repeated url) through a
 build, an ingest and a compaction.
 """
 
-import numpy as np
+import glob
+import os
+
+import pyarrow.parquet as pq
 import pytest
 from hypothesis import Phase, given, settings
 from hypothesis import strategies as st
 
 from search_engine_trec_fair_ranking_19_spark.config import EngineConfig
-from search_engine_trec_fair_ranking_19_spark.functions.codec import decode_block
 from search_engine_trec_fair_ranking_19_spark.operators.index_build import build_index
 from search_engine_trec_fair_ranking_19_spark.oracle import engine as oracle
 from search_engine_trec_fair_ranking_19_spark.sources.webtext import (
@@ -87,28 +90,56 @@ def test_doc_stats_match_oracle(spark, tables, oracle_index):
 
 
 def test_postings_blocks_match_oracle(spark, tables, oracle_index):
-    blocks = tables.postings(spark).collect()
+    """The postings equal the oracle's (term → [(docid, tf)]) with each doc's
+    length inlined, and posting_blocks holds exactly the (df, max_tf,
+    min_dl) of each (term, docid DIV block_size) group of them."""
     got: dict[str, list[tuple[int, int]]] = {}
     dls_by_doc: dict[int, int] = {}
-    for b in blocks:
-        docids, tfs, dls = decode_block(
-            bytes(b["gaps"]), bytes(b["tfs"]), bytes(b["dls"])
+    want_blocks: dict[tuple[str, int], list] = {}
+    for r in tables.postings(spark).collect():
+        got.setdefault(r["term"], []).append((r["docid"], r["tf"]))
+        dls_by_doc[r["docid"]] = r["dl"]
+        b = want_blocks.setdefault(
+            (r["term"], r["docid"] // CFG.postings_block_size), [0, 0, r["dl"]]
         )
-        # block invariants
-        assert b["df"] == docids.size
-        assert np.all(np.diff(docids) > 0)  # strictly ascending in block
-        assert b["max_tf"] == tfs.max()
-        assert b["min_dl"] == dls.min()
-        assert np.all(docids // CFG.postings_block_size == b["block_id"])
-        got.setdefault(b["term"], []).extend(zip(docids.tolist(), tfs.tolist()))
-        for d, dl in zip(docids.tolist(), dls.tolist()):
-            dls_by_doc[d] = dl
+        b[0] += 1
+        b[1] = max(b[1], r["tf"])
+        b[2] = min(b[2], r["dl"])
     for term in got:
         got[term].sort()
     assert got == oracle_index.postings
     assert dls_by_doc == {
         d: v for d, v in oracle_index.token_count.items() if v > 0
     }
+    blocks = tables.posting_blocks(spark).collect()
+    assert len(blocks) == len(want_blocks)
+    assert {
+        (b["term"], b["block_id"]): [b["df"], b["max_tf"], b["min_dl"]]
+        for b in blocks
+    } == want_blocks
+
+
+def test_postings_parquet_encoding(tables):
+    """Every postings part file stores docid, tf and dl DELTA_BINARY_PACKED
+    (delta + bit-packed miniblocks, the JVM writer's block compression),
+    no column has a dictionary page, and its rows are sorted by (term,
+    docid)."""
+    files = sorted(glob.glob(os.path.join(tables.path, "postings", "part-*")))
+    assert files
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        for g in range(md.num_row_groups):
+            cols = {
+                c.path_in_schema: c
+                for c in map(md.row_group(g).column, range(md.num_columns))
+            }
+            for name in ("docid", "tf", "dl"):
+                assert "DELTA_BINARY_PACKED" in cols[name].encodings, (f, name)
+            for c in cols.values():
+                assert not c.has_dictionary_page, (f, c.path_in_schema)
+        t = pq.read_table(f, columns=["term", "docid"])
+        keys = list(zip(t.column("term").to_pylist(), t.column("docid").to_pylist()))
+        assert keys == sorted(keys), f
 
 
 def test_resume_skips_completed_stages(spark, tables, oracle_index):

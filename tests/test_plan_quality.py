@@ -32,29 +32,28 @@ def tables(spark, tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def two_part(spark, tables):
-    """A second handle on the same index whose postings caches (decoded and
-    compressed) keep two partitions. The default handle's are coalesced to
-    one at this size, and a one-partition cache is SinglePartition-
-    distributed: Catalyst then plans no hash exchange above it."""
+    """A second handle on the same index whose postings cache keeps two
+    partitions. The default handle's is coalesced to one at this size, and
+    a one-partition cache is SinglePartition-distributed: Catalyst then
+    plans no hash exchange above it."""
     mp = pytest.MonkeyPatch()
     mp.setattr(ib, "_right_size_for_cache", lambda df: df.repartition(2))
     try:
         h = IndexTables(tables.path, tables.config)
-        h.decoded_postings(spark)
         h.postings(spark)
     finally:
         mp.undo()
-    parts = [t.decoded_postings(spark).rdd.getNumPartitions() for t in (tables, h)]
+    parts = [t.postings(spark).rdd.getNumPartitions() for t in (tables, h)]
     assert parts == [1, 2]
     yield h
     h.refresh()
 
 
 def _hash_exchanges(spark, handle, n: int) -> int:
-    """The pinned hash-exchange count of a plan over ``handle``'s decoded
-    postings: ``n`` over a multi-partition cache, 0 over a one-partition
-    cache (whose SinglePartition output satisfies every distribution)."""
-    return 0 if handle.decoded_postings(spark).rdd.getNumPartitions() == 1 else n
+    """The pinned hash-exchange count of a plan over ``handle``'s postings
+    cache: ``n`` over a multi-partition cache, 0 over a one-partition cache
+    (whose SinglePartition output satisfies every distribution)."""
+    return 0 if handle.postings(spark).rdd.getNumPartitions() == 1 else n
 
 
 def _plan(df) -> str:
@@ -76,18 +75,6 @@ def _collected_plans(spark, monkeypatch, call) -> list[str]:
         m.setattr(frame_cls, "collect", spy)
         call()
     return plans
-
-
-def _outside_cache(plan: str) -> str:
-    """A plan's text without the subtrees of its cached relations."""
-    keep, cache_depth = [], None
-    for line in plan.splitlines():
-        depth = len(line) - len(line.lstrip(" :|+-"))
-        if cache_depth is not None and depth > cache_depth:
-            continue
-        cache_depth = depth if "InMemoryRelation" in line else None
-        keep.append(line)
-    return "\n".join(keep)
 
 
 def test_batch_plan_two_shuffles_and_group_limit(spark, tables, two_part):
@@ -143,16 +130,21 @@ def test_scoring_stage_has_no_join(spark, tables, two_part, monkeypatch):
         assert plan.count("Exchange hashpartitioning") == want, plan
 
 
-@pytest.mark.parametrize("model", ["bm25", "vsm", "existential", "conjunctive"])
+@pytest.mark.parametrize(
+    "model", ["bm25", "vsm", "existential", "conjunctive", "wand"]
+)
 def test_bounded_k_query_runs_no_python(spark, tables, monkeypatch, model):
-    """A bounded-k query scans the decoded-postings cache: the only Python
-    node of its executed plans is the decode INSIDE the cached relation
-    (run once, when the cache fills), none above it."""
+    """A bounded-k query, forced block-max WAND included, scans the cached
+    postings relation: no Python node in any of its executed plans, inside
+    or outside the cached relation."""
     fn = {
         "bm25": q.bm25_topk,
         "vsm": q.vsm_topk,
         "existential": q.existential,
         "conjunctive": q.conjunctive,
+        "wand": lambda *a, **kw: q.bm25_topk_wand(
+            *a, config=CFG.with_(wand_min_postings=0), **kw
+        ),
     }[model]
     fn(spark, tables, "web search", k=10)  # handle state loaded first
     # bounded k: the query runs inside the call
@@ -161,26 +153,19 @@ def test_bounded_k_query_runs_no_python(spark, tables, monkeypatch, model):
     )
     assert plans and all("InMemoryRelation" in p for p in plans), plans
     for plan in plans:
-        outside = _outside_cache(plan)
         for node in ("MapInArrow", "ArrowEvalPython", "BatchEvalPython"):
-            assert node not in outside, plan
+            assert node not in plan, plan
 
 
 def test_postings_scan_prunes_to_term_filter(spark, tables):
-    """matched_postings must push the term IN-filter to the postings scan
-    (cached: InMemoryTableScan filter pushdown; cold parquet: PushedFilters)
-    rather than decode-then-filter."""
-    df = q.matched_postings(spark, tables, ["web", "search"])
-    plan = _plan(df)
-    # the Filter must sit below the decode (FlatMapsInPandas/ArrowEvalPython
-    # variants) in the string rendering = appear AFTER it top-down
-    decode_pos = max(plan.find("Arrow"), plan.find("FlatMap"), plan.find("Eval"))
-    filter_pos = plan.find("term#")
-    assert filter_pos != -1
-    assert "in(term" in plan.lower() or "term" in plan, plan
-    assert decode_pos != -1 and plan.find("Filter", decode_pos) != -1 or (
-        "InMemoryTableScan" in plan
-    ), plan
+    """matched_postings pushes the term IN-filter into the cached postings
+    scan (InMemoryTableScan's batch pruning on the term column stats); the
+    Parquet pushdown over a closed size gate is pinned by
+    test_query_parity.test_closed_size_gate_matches_decoded_cache."""
+    import re
+
+    plan = _plan(q.matched_postings(spark, tables, ["web", "search"]))
+    assert re.search(r"InMemoryTableScan \[[^\]]*\], \[term#\d+ IN \(", plan), plan
 
 
 def test_deterministic_split_is_map_only_and_pruned(spark, tmp_path):

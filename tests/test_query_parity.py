@@ -213,9 +213,9 @@ def test_wand_threshold_routes_small_queries_to_exhaustive(
     """Routing pins of bm25_topk_wand, each returning the oracle's ranking:
     below the production wand_min_postings (Σ DF of the query terms under
     the measured crossover, BENCH/wand_crossover.json) it takes the
-    exhaustive fallback; with the decoded-postings cache open it takes it
-    for ANY nonzero threshold (WAND over the cache was measured 6× slower
-    than the cached plan); with the size gate closed, a selective query
+    exhaustive fallback; with the postings cache open it takes it for ANY
+    nonzero threshold (WAND over the cache was measured slower than the
+    cached plan); with the size gate closed, a selective query
     that clears the threshold runs the pruned path; threshold 0 forces it."""
     from search_engine_trec_fair_ranking_19_spark.operators.index_build import (
         IndexTables,
@@ -235,7 +235,7 @@ def test_wand_threshold_routes_small_queries_to_exhaustive(
         t for t, df in oracle_index.df.items() if df == 1 and t[1:].isdigit()
     )
     selective, cfg1 = f"{hapax} web", CFG.with_(wand_min_postings=1)
-    assert tables.decoded_postings(spark) is not None
+    assert tables.postings(spark).is_cached
     assert route(tables, selective, 1, cfg1)["fallback"] == "exhaustive"
 
     # forced WAND (threshold 0) runs the real pruned path with the cache open
@@ -245,7 +245,7 @@ def test_wand_threshold_routes_small_queries_to_exhaustive(
     monkeypatch.setattr(IndexTables, "_decoded_fits", lambda self, spark: False)
     closed = IndexTables(tables.path, tables.config)
     try:
-        assert closed.decoded_postings(spark) is None
+        assert not closed.postings(spark).is_cached
         stats = route(closed, selective, 1, cfg1)
         assert "fallback" not in stats and "theta" in stats
     finally:
@@ -452,46 +452,47 @@ def test_bm25_batch_heterogeneous_blocks_match_oracle(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Decoded-postings cache: the size gate, empty decodes, other sessions
+# The postings cache: the size gate, other sessions, refresh
 # ---------------------------------------------------------------------------
 
 
-def test_decode_blocks_empty_input(spark, tables):
-    """decode_blocks of an empty frame, and of a frame filtered to zero
-    rows, is 0 rows with the decoded schema (never one row per empty
-    Arrow batch)."""
-    from pyspark.sql import functions as F
-
-    blocks = tables.postings(spark)
-    for frame in (
-        spark.createDataFrame([], blocks.schema),
-        blocks.filter(F.col("term") == "zzzznotfound"),
-    ):
-        out = q.decode_blocks(frame)
-        assert out.collect() == []
-        assert out.columns == ["term", "docid", "tf", "dl"]
-
-
 def test_closed_size_gate_matches_decoded_cache(spark, tables, monkeypatch):
-    """With the decoded-postings size gate closed, every model decodes the
-    compressed blocks it matches per query instead — and returns
-    BIT-identical (docid, score) lists to the decoded-cache path."""
+    """With the postings size gate closed, every model runs its statement
+    over the uncached postings relation instead, whose term filter is pushed
+    down to the Parquet scan (row-group pruning, no in-memory relation) —
+    and returns BIT-identical (docid, score) lists to the cached path."""
+    import re
+
     from search_engine_trec_fair_ranking_19_spark.operators.index_build import (
         IndexTables,
     )
 
-    # filled before the patch
-    assert tables.decoded_postings(spark).columns == ["term", "docid", "tf", "dl"]
+    assert tables.postings(spark).columns == ["term", "docid", "tf", "dl"]
+    assert tables.postings(spark).is_cached
+    models = (q.bm25_topk, q.vsm_topk, q.existential, q.conjunctive)
+    cases = [(fn, query, k) for fn in models for query in QUERIES for k in (25, None)]
+    want = {
+        case: [(r["docid"], r["score"]) for r in case[0](spark, tables, *case[1:]).collect()]
+        for case in cases
+    }
+    # handles on one path share Spark's cache entries: drop the open
+    # handle's, or the closed handle's identical plan would read them
+    tables.refresh()
     monkeypatch.setattr(IndexTables, "_decoded_fits", lambda self, spark: False)
     closed = IndexTables(tables.path, tables.config)
-    assert closed.decoded_postings(spark) is None
+    assert not closed.postings(spark).is_cached
+    pushed = re.compile(r"PushedFilters: \[[^\]]*(In\(term,|EqualTo\(term,)")
     matched = 0
-    for fn in (q.bm25_topk, q.vsm_topk, q.existential, q.conjunctive):
-        for query in QUERIES:
-            want = [(r["docid"], r["score"]) for r in fn(spark, tables, query, k=25).collect()]
-            got = [(r["docid"], r["score"]) for r in fn(spark, closed, query, k=25).collect()]
-            assert got == want, f"{fn.__name__} diverged on {query!r}"
-            matched += len(got)
+    for fn, query, k in cases:
+        frame = fn(spark, closed, query, k)
+        got = [(r["docid"], r["score"]) for r in frame.collect()]
+        assert got == want[fn, query, k], f"{fn.__name__} k={k} diverged on {query!r}"
+        matched += len(got)
+        if k is None and got:
+            plan = frame._jdf.queryExecution().executedPlan().toString()
+            assert pushed.search(plan), plan
+            if fn is not q.vsm_topk:  # vsm also joins the cached doc_stats
+                assert "InMemoryRelation" not in plan, plan
     assert matched > 0
     closed.refresh()
 
@@ -529,7 +530,7 @@ def test_refresh_recaches_other_handle_on_same_path(spark, tables):
     assert run(other) == want
     other.refresh()
     assert run(tables) == want
-    for df in (tables.postings(spark), tables.decoded_postings(spark)):
+    for df in (tables.postings(spark), tables.posting_blocks(spark)):
         assert df.storageLevel.useMemory, df.storageLevel
     assert run(other) == want  # and the refreshed handle refills too
 
@@ -570,7 +571,7 @@ def test_exotic_terms_match_oracle(spark, tmp_path, monkeypatch):
     """Query terms are bound as parameter markers, never formatted into SQL
     text: terms holding quotes, backslashes, NUL, newlines, SQL-injection
     shapes or non-ASCII text rank exactly like the oracle in every model, at
-    k=10 and k=None, with the decoded-postings cache open and closed. One
+    k=10 and k=None, with the postings cache open and closed. One
     corpus doc holds a NUL-bearing token, so that term matches a posting."""
     from search_engine_trec_fair_ranking_19_spark.operators.index_build import (
         IndexTables,
@@ -587,24 +588,27 @@ def test_exotic_terms_match_oracle(spark, tmp_path, monkeypatch):
     webtext = spark.createDataFrame(docs, "url string, text string")
     opened = build_index(spark, webtext, str(tmp_path / "exotic"), cfg)
     oidx = oracle.build_index(docs, cfg)
-    assert opened.decoded_postings(spark) is not None
-    monkeypatch.setattr(IndexTables, "_decoded_fits", lambda self, spark: False)
-    closed = IndexTables(opened.path, opened.config)
-    assert closed.decoded_postings(spark) is None
-
     models = [
         (q.bm25_topk, oracle.bm25_topk),
         (q.vsm_topk, oracle.vsm_topk),
         (q.existential, oracle.existential),
         (q.conjunctive, oracle.conjunctive),
     ]
-    nul_hits = 0
-    for handle in (opened, closed):
+
+    def check(handle) -> int:
         for fn, ofn in models:
             for query in EXOTIC_QUERIES:
                 for k in (10, None):
                     exp = ofn(oidx, query, k=k)
                     _assert_matches(fn(spark, handle, query, k=k), exp, k)
-        nul_hits += len(q.conjunctive(spark, handle, "web zero\x00byte").collect())
+        return len(q.conjunctive(spark, handle, "web zero\x00byte").collect())
+
+    assert opened.postings(spark).is_cached
+    nul_hits = check(opened)
+    opened.refresh()  # the path's shared cache, which closed must not read
+    monkeypatch.setattr(IndexTables, "_decoded_fits", lambda self, spark: False)
+    closed = IndexTables(opened.path, opened.config)
+    assert not closed.postings(spark).is_cached
+    nul_hits += check(closed)
     assert nul_hits == 4  # docs 0 and 3, through both handles
     closed.refresh()
